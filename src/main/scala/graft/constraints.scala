@@ -148,18 +148,23 @@ object Constraints {
   private[graft] val jsonTypeNames: Set[String] =
     Set("string", "integer", "number", "boolean", "array", "object", "null")
 
+  /** `a div b`: Catalyst's TRUE integral division (truncating; null on a
+    * zero divisor) — no double round-trip that could flip a quotient
+    * within one ulp of an integer between engines. */
+  private[graft] def intDiv(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.GraftShim
+    import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+    GraftShim.column(new IntegralDivide(GraftShim.expression(a), GraftShim.expression(b)))
+  }
+
   /** `floor(num·10^6 / den)` with the division in DECIMAL(38,0) — TRUE
     * integral division (no double round-trip, no half-up decimal rounding
     * that could flip a floor by one ulp between engines), and num·10^6
     * can't overflow a LONG mid-expression. The shared fixed-point-rate
     * primitive (same contract as perplexityFp / oovProfile). */
   private[graft] def intDivFp(num: Column, den: Column): Column = {
-    import org.apache.spark.sql.GraftShim
-    import org.apache.spark.sql.catalyst.expressions.IntegralDivide
     val d38 = DecimalType(38, 0)
-    GraftShim.column(new IntegralDivide(
-      GraftShim.expression(num.cast(d38) * lit(1000000)),
-      GraftShim.expression(den.cast(d38)))).cast(LongType)
+    intDiv(num.cast(d38) * lit(1000000), den.cast(d38)).cast(LongType)
   }
 }
 

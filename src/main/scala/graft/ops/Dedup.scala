@@ -182,7 +182,10 @@ object Dedup {
     * minhashLsh's oversized buckets) rather than letting one reducer go
     * cartesian — at 100 TB a (web, en) block is billions of rows. For
     * LSH-generated candidates use [[ngramJaccardFor]], which is linear in the
-    * candidate count. Integer outputs (inter, uni) keep it oracle-exact. */
+    * candidate count. Integer outputs (inter, uni) keep it oracle-exact.
+    * `maxBlock = Int.MaxValue` means truly unbounded: the guard is skipped,
+    * so no block is ever dropped. (Before the skip, the guard compared the
+    * LONG block count against it, an implicit cap at 2^31 - 1 rows.) */
   def ngramJaccard(df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], shingleK: Int = 1, minJaccard: Double = 0.8,
       maxBlock: Int = 10000, minContainment: Option[Double] = None): DataFrame = {

@@ -50,8 +50,17 @@ object Pipeline {
     * language's bucket population is visible whether or not it was kept.
     * Tokenless rows are DROPPED (they have no perplexity; CCNet has
     * nothing to say about them — gate them upstream with length checks).
+    *
     * `exact = true` uses the order-statistic thresholds (driver collects
-    * the SAMPLE, `maxSample`-guarded); default is the sketch path. */
+    * the SAMPLE, `maxSample`-guarded) and scores the corpus exactly once:
+    * the scored rows (text included) are persisted MEMORY_AND_DISK, the
+    * threshold sample materializes that cache, and the counts — at most
+    * |languages| × 3 rows — are computed from it AT CALL TIME and returned
+    * as a local frame, so a language missing from the sample fails here.
+    * The survivors frame reads the same cache and releases it after its
+    * first action; consume the survivors once (or persist them) — a
+    * second action re-scores. The default sketch path returns two lazy
+    * frames that each score on evaluation. */
   def ccnetSelect(docs: DataFrame, textCol: String, idCol: String,
       langCol: String, model: UnigramLM.NgramModel,
       keep: Set[String] = Set("head", "middle"),
@@ -63,13 +72,22 @@ object Pipeline {
       .filter(col("n_tok") > 0)
       .withColumn("ppl_fp",
         UnigramLM.perplexityFp(col("logprob_fp"), col("n_tok")))
-    val bucketed =
-      if (exact) UnigramLM.perplexityBucketsExactByGroup(
-        scored, idCol, "ppl_fp", langCol, sampleFraction, salt)
-      else UnigramLM.perplexityBucketsByGroup(
-        scored, idCol, "ppl_fp", langCol, sampleFraction, salt)
-    val counts = bucketed.groupBy(col(langCol), col("bucket"))
-      .agg(count(lit(1)).as("n_rows"))
-    (bucketed.filter(col("bucket").isin(keep.toSeq: _*)), counts)
+    def split(bucketed: DataFrame): (DataFrame, DataFrame) =
+      (bucketed.filter(col("bucket").isin(keep.toSeq: _*)),
+        bucketed.groupBy(col(langCol), col("bucket")).agg(count(lit(1)).as("n_rows")))
+    if (!exact) split(UnigramLM.perplexityBucketsByGroup(
+      scored, idCol, "ppl_fp", langCol, sampleFraction, salt))
+    else {
+      val cached = scored.persist()
+      val release = () => { cached.unpersist(); () }
+      try {
+        val (survivors, counts) = split(cached.withColumn("bucket",
+          UnigramLM.groupTertiles(cached, idCol, "ppl_fp", langCol,
+            sampleFraction, salt, maxSample = 2000000, maxGroups = 10000)))
+        val localCounts = docs.sparkSession.createDataFrame(
+          java.util.Arrays.asList(counts.collect(): _*), counts.schema)
+        (graft.AutoRelease.onFirstMaterialize(survivors, release), localCounts)
+      } catch { case e: Throwable => release(); throw e }
+    }
   }
 }

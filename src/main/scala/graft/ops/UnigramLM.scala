@@ -37,16 +37,8 @@ object UnigramLM {
   /** Train on a corpus. Vocabulary ties at the V boundary break
     * deterministically by (count desc, term asc). */
   def train(df: DataFrame, textCol: String, vocabSize: Int): Model = {
-    val toks = tokens(col(textCol))
-    val total = df.select(sum(size(toks)).as("n")).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
-    val vocab = df.select(explode(toks).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), col("term")).limit(vocabSize)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    Model(vocab, total)
+    val m = trainNgram(df, textCol, Seq(vocabSize))
+    Model(m.grams(0), m.totalTokens)
   }
 
   /** Attach `logprob_fp` (fixed-point total log-likelihood) and `n_tok`
@@ -71,15 +63,6 @@ object UnigramLM {
         tokensCol, unigrams, bigrams, totalTokens)
   }
 
-  /** Adjacent-word bigrams as U+0001-joined strings (in-row — token
-    * occurrences never shuffle; only per-doc bigram instances explode into
-    * the count agg). */
-  private def bigramsCol(toks: Column): Column = {
-    val m = greatest(size(toks) - 1, lit(0))
-    zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => concat(a, lit("\u0001"), b))
-  }
-
   /** Train unigram + bigram vocabularies. Ties at either V boundary break
     * deterministically by (count desc, key asc).
     *
@@ -94,13 +77,8 @@ object UnigramLM {
   def trainBigram(df: DataFrame, textCol: String, vocabSize: Int,
       bigramSize: Int, trainFraction: Double = 1.0,
       idCol: String = ""): BigramModel = {
-    val base0 = trainingSlice(df, trainFraction, idCol)
-    val base = train(base0, textCol, vocabSize)
-    val bigrams = base0.select(explode(bigramsCol(tokens(col(textCol)))).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), col("bg")).limit(bigramSize)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    BigramModel(base.vocab, bigrams, base.totalTokens)
+    val m = trainNgram(df, textCol, Seq(vocabSize, bigramSize), trainFraction, idCol)
+    BigramModel(m.grams(0), m.grams(1), m.totalTokens)
   }
 
   /** Shared sample-gating for every trainer that offers `trainFraction`
@@ -139,29 +117,14 @@ object UnigramLM {
         tokensCol, unigrams, bigrams, trigrams, totalTokens)
   }
 
-  /** Adjacent-word trigrams as U+0001-joined strings (in-row, like
-    * [[bigramsCol]]). */
-  private def trigramsCol(toks: Column): Column = {
-    val m = greatest(size(toks) - 2, lit(0))
-    zip_with(
-      zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-        (a, b) => concat(a, lit("\u0001"), b)),
-      slice(toks, lit(3), m),
-      (ab, c) => concat(ab, lit("\u0001"), c))
-  }
-
   /** Train unigram + bigram + trigram vocabularies (same deterministic
     * tie-breaks; same `trainFraction` scale path as [[trainBigram]]). */
   def trainTrigram(df: DataFrame, textCol: String, vocabSize: Int,
       bigramSize: Int, trigramSize: Int, trainFraction: Double = 1.0,
       idCol: String = ""): TrigramModel = {
-    val base0 = trainingSlice(df, trainFraction, idCol)
-    val bi = trainBigram(base0, textCol, vocabSize, bigramSize)
-    val trigrams = base0.select(explode(trigramsCol(tokens(col(textCol)))).as("tg"))
-      .groupBy("tg").agg(count(lit(1)).as("c"))
-      .orderBy(desc("c"), col("tg")).limit(trigramSize)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    TrigramModel(bi.unigrams, bi.bigrams, trigrams, bi.totalTokens)
+    val m = trainNgram(df, textCol, Seq(vocabSize, bigramSize, trigramSize),
+      trainFraction, idCol)
+    TrigramModel(m.grams(0), m.grams(1), m.grams(2), m.totalTokens)
   }
 
   /** Attach trigram-interpolated `logprob_fp` and `n_tok`. */
@@ -186,34 +149,46 @@ object UnigramLM {
       graft.functions.TextFunctions.ngram_logprob_fp(tokensCol, grams, totalTokens)
   }
 
-  /** Adjacent-word k-grams as U+0001-joined strings (in-row; generalizes
-    * [[bigramsCol]]/[[trigramsCol]]). */
-  private def ngramsCol(toks: Column, k: Int): Column = {
-    val m = greatest(size(toks) - (k - 1), lit(0))
-    (2 to k).foldLeft(slice(toks, lit(1), m)) { (acc, j) =>
-      zip_with(acc, slice(toks, lit(j), m), (a, b) => concat(a, lit("\u0001"), b))
+  /** Adjacent-word k-grams as U+0001-joined strings (in-row — token
+    * occurrences never shuffle; only per-doc k-gram instances explode into
+    * the count agg). k = 1 is the tokens themselves. */
+  private def ngramsCol(toks: Column, k: Int): Column =
+    if (k == 1) toks
+    else {
+      val m = greatest(size(toks) - (k - 1), lit(0))
+      (2 to k).foldLeft(slice(toks, lit(1), m)) { (acc, j) =>
+        zip_with(acc, slice(toks, lit(j), m), (a, b) => concat(a, lit("\u0001"), b))
+      }
     }
-  }
 
   /** Train bounded vocabularies for every order 1..`sizes.length` in one
     * call — `sizes(j)` caps the (j+1)-gram vocabulary, ties at every
     * boundary break deterministically by (count desc, key asc); same
-    * `trainFraction` scale path as [[trainBigram]]. Each level is its own
+    * `trainFraction` scale path as [[trainBigram]]. The training slice is
+    * tokenized ONCE: its narrow `toks` column is persisted, the first
+    * action (the total token count) materializes it, and every level's
     * explode→count agg (map-side combine; the only shuffle is on n-gram
-    * keys) — independent levels, so on a real cluster they can even be
-    * submitted concurrently; the driver holds only the top-K maps. */
+    * keys) reads the cache instead of re-running the caller's plan (scan,
+    * gates, sample) per level. The cache is released before returning;
+    * the driver holds only the top-K maps. */
   def trainNgram(df: DataFrame, textCol: String, sizes: Seq[Int],
       trainFraction: Double = 1.0, idCol: String = ""): NgramModel = {
     require(sizes.nonEmpty, "need at least a unigram vocabulary size")
-    val base0 = trainingSlice(df, trainFraction, idCol)
-    val uni = train(base0, textCol, sizes.head)
-    val higher = (2 to sizes.length).map { k =>
-      base0.select(explode(ngramsCol(tokens(col(textCol)), k)).as("g"))
-        .groupBy("g").agg(count(lit(1)).as("c"))
-        .orderBy(desc("c"), col("g")).limit(sizes(k - 1))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-    NgramModel(uni.vocab +: higher, uni.totalTokens)
+    val toks = trainingSlice(df, trainFraction, idCol)
+      .select(tokens(col(textCol)).as("toks")).persist()
+    try {
+      val total = toks.select(sum(size(col("toks")))).head() match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
+      val grams = sizes.zipWithIndex.map { case (cap, j) =>
+        toks.select(explode(ngramsCol(col("toks"), j + 1)).as("g"))
+          .groupBy("g").agg(count(lit(1)).as("c"))
+          .orderBy(desc("c"), col("g")).limit(cap)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      NgramModel(grams, total)
+    } finally toks.unpersist()
   }
 
   /** Attach order-N interpolated `logprob_fp` and `n_tok`. */
@@ -275,12 +250,8 @@ object UnigramLM {
     * `//`), not a double round-trip — a quotient within 1 ulp of an
     * integer must not flip a bucket between engines. Rows with
     * `n_tok = 0` yield null (filter them before bucketing). */
-  def perplexityFp(logprobFpCol: Column, nTokCol: Column): Column = {
-    import org.apache.spark.sql.GraftShim
-    import org.apache.spark.sql.catalyst.expressions.IntegralDivide
-    GraftShim.column(new IntegralDivide(
-      GraftShim.expression(-logprobFpCol), GraftShim.expression(nTokCol)))
-  }
+  def perplexityFp(logprobFpCol: Column, nTokCol: Column): Column =
+    graft.Constraints.intDiv(-logprobFpCol, nTokCol)
 
   private def bucketize(scored: DataFrame, pplCol: String,
       tHead: Long, tMid: Long): DataFrame =
@@ -308,12 +279,12 @@ object UnigramLM {
     // pass AND in every Filter/Project referencing a derived column —
     // measured 1.8 s vs 0.7 s on the sf0.1 ccnet path). Persisting the
     // frame makes the sampling pass materialize it once; every later pass
-    // reads cached rows. MEMORY_AND_DISK and released after the first
-    // materializing action on the returned frame, so a long-lived session
-    // accretes nothing. Callers pass a NARROW scored frame (id, ppl, group
-    // + score columns — never the text), so the cached bytes are O(rows ×
-    // tens of bytes), strictly cheaper than re-running tokenize+trie
-    // scoring over the corpus at any scale.
+    // reads cached rows. The cache is MEMORY_AND_DISK (it spills rather
+    // than fails) and is released after the first materializing action on
+    // the returned frame, so a long-lived session accretes nothing. It
+    // holds EVERY column of `scored`: a narrow frame (id, ppl, group +
+    // score columns) caches O(rows × tens of bytes), while whole document
+    // rows — what [[Pipeline.ccnetSelect]] passes — cache the text too.
     val cached = scored.persist()
     val release = () => { cached.unpersist(); () }
     try {
@@ -351,46 +322,57 @@ object UnigramLM {
       pplCol: String, groupCol: String, sampleFraction: Double = 0.3,
       salt: Long = 0L, maxSample: Int = 2000000,
       maxGroups: Int = 10000): DataFrame = {
-    // score once: same cache discipline (and rationale) as
-    // [[perplexityBucketsExact]] — the sampling pass materializes the
-    // narrow scored frame, the bucket chain reads it back, and the cache
-    // self-releases after the first action on the returned frame.
+    // score once: same cache discipline (MEMORY_AND_DISK, every column of
+    // `scored`) and rationale as [[perplexityBucketsExact]] — the sampling
+    // pass materializes the scored frame, the bucket chain reads it back,
+    // and the cache self-releases after the first action on the returned
+    // frame.
     val cached = scored.persist()
     val release = () => { cached.unpersist(); () }
-    try {
-      val samp = Sampling.deterministicSample(
-        cached.select(col(idCol), col(groupCol), col(pplCol)), idCol,
-        sampleFraction, salt)
-      val rows = samp.select(col(groupCol).cast("string").as("g"),
-          col(pplCol).cast("long").as("p"))
-        .limit(maxSample + 1).collect()
-      require(rows.nonEmpty, "perplexityBucketsExactByGroup: empty threshold sample")
-      require(rows.length <= maxSample,
-        s"perplexityBucketsExactByGroup: threshold sample exceeds maxSample=$maxSample — " +
-          "lower sampleFraction or use the sketch-based perplexityBucketsByGroup")
-      val byGroup = rows.groupBy(r => Option(r.getString(0)))
-      require(byGroup.size <= maxGroups,
-        s"perplexityBucketsExactByGroup: ${byGroup.size} groups exceed maxGroups=$maxGroups — " +
-          "a high-cardinality group column would compile an unbounded when-chain; " +
-          "bucket per-partition or use a join-based formulation")
-      val chain = byGroup.toSeq.sortBy(_._1).foldRight(
-        // unreached when every scored group was sampled; otherwise: loud
-        raise_error(concat(
-          lit("perplexityBucketsExactByGroup: no sampled thresholds for group "),
-          coalesce(col(groupCol).cast("string"), lit("NULL")))).cast("string")
-      ) { case ((g, rs), acc) =>
-        val sorted = rs.map(_.getLong(1)).sorted
-        val n = sorted.length
-        val inner = when(col(pplCol) <= sorted((n + 2) / 3 - 1), lit("head"))
-          .when(col(pplCol) <= sorted((2 * n + 2) / 3 - 1), lit("middle"))
-          .otherwise(lit("tail"))
-        val cond = g.map(v => col(groupCol).cast("string") === v)
-          .getOrElse(col(groupCol).isNull)
-        when(cond, inner).otherwise(acc)
-      }
-      graft.AutoRelease.onFirstMaterialize(
-        cached.withColumn("bucket", chain), release)
-    } catch { case e: Throwable => release(); throw e }
+    try graft.AutoRelease.onFirstMaterialize(cached.withColumn("bucket",
+        groupTertiles(cached, idCol, pplCol, groupCol, sampleFraction, salt,
+          maxSample, maxGroups)), release)
+    catch { case e: Throwable => release(); throw e }
+  }
+
+  /** The per-group bucket expression behind [[perplexityBucketsExactByGroup]]
+    * and [[Pipeline.ccnetSelect]]: collects the (group, ppl) hash-sample of
+    * `scored` (one action, `maxSample`-guarded) and compiles each group's
+    * tertile thresholds into a when-chain whose fallback raises for a group
+    * the sample never saw. */
+  private[ops] def groupTertiles(scored: DataFrame, idCol: String,
+      pplCol: String, groupCol: String, sampleFraction: Double, salt: Long,
+      maxSample: Int, maxGroups: Int): Column = {
+    val samp = Sampling.deterministicSample(
+      scored.select(col(idCol), col(groupCol), col(pplCol)), idCol,
+      sampleFraction, salt)
+    val rows = samp.select(col(groupCol).cast("string").as("g"),
+        col(pplCol).cast("long").as("p"))
+      .limit(maxSample + 1).collect()
+    require(rows.nonEmpty, "perplexityBucketsExactByGroup: empty threshold sample")
+    require(rows.length <= maxSample,
+      s"perplexityBucketsExactByGroup: threshold sample exceeds maxSample=$maxSample — " +
+        "lower sampleFraction or use the sketch-based perplexityBucketsByGroup")
+    val byGroup = rows.groupBy(r => Option(r.getString(0)))
+    require(byGroup.size <= maxGroups,
+      s"perplexityBucketsExactByGroup: ${byGroup.size} groups exceed maxGroups=$maxGroups — " +
+        "a high-cardinality group column would compile an unbounded when-chain; " +
+        "bucket per-partition or use a join-based formulation")
+    byGroup.toSeq.sortBy(_._1).foldRight(
+      // unreached when every scored group was sampled; otherwise: loud
+      raise_error(concat(
+        lit("perplexityBucketsExactByGroup: no sampled thresholds for group "),
+        coalesce(col(groupCol).cast("string"), lit("NULL")))).cast("string")
+    ) { case ((g, rs), acc) =>
+      val sorted = rs.map(_.getLong(1)).sorted
+      val n = sorted.length
+      val inner = when(col(pplCol) <= sorted((n + 2) / 3 - 1), lit("head"))
+        .when(col(pplCol) <= sorted((2 * n + 2) / 3 - 1), lit("middle"))
+        .otherwise(lit("tail"))
+      val cond = g.map(v => col(groupCol).cast("string") === v)
+        .getOrElse(col(groupCol).isNull)
+      when(cond, inner).otherwise(acc)
+    }
   }
 
   /** Sketch-based thresholds for the 100 TB path: `approx_percentile` over

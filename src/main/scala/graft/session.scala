@@ -33,15 +33,28 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.session.timeZone", "UTC")
 
+  /** The environment variable that overrides [[local]]'s master URL. */
+  private[graft] val MasterEnv = "SPARK_GRAFT_MASTER"
+
+  /** The master URL [[local]] uses, and whether `env` overrode it: the
+    * value of [[MasterEnv]] when set, else `local[cores]`. */
+  private[graft] def selectMaster(cores: Int, env: collection.Map[String, String]): (String, Boolean) =
+    env.get(MasterEnv).fold((s"local[$cores]", false))(m => (m, true))
+
   /** Local development/test session at `cores` threads.
     *
     * SPARK_GRAFT_MASTER (optional) overrides the master URL so the SAME
     * mains can run under a real multi-JVM scheduler (e.g. spark-submit
     * --master local-cluster[2,4,4096]: separate executor processes, torrent
     * broadcast fetch, cross-process task/aggregate serialization) — the
-    * default is the plain local[cores] the bench contract specifies. */
+    * default is the plain local[cores] the bench contract specifies. An
+    * active override is logged at WARN, so a run under another master
+    * says so. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
+    val (master, overridden) = selectMaster(cores, sys.env)
+    if (overridden)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"GraftSession.local: master '$master' from $MasterEnv replaces local[$cores]")
     val s = tuned(SparkSession.builder().master(master).appName(appName), cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
