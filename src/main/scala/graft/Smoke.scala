@@ -16,15 +16,17 @@ object Smoke {
     // SPARK_GRAFT_MASTER lets the same smoke surface run under a real
     // multi-JVM scheduler (e.g. spark-submit --master local-cluster[2,4,4096]
     // — separate executor processes, torrent broadcast fetch, task
-    // serialization of the custom expressions/aggregates); default unchanged
+    // serialization of the custom expressions/aggregates); default unchanged,
+    // and an active override is logged at WARN
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
+      .master(GraftSession.selectMaster(8, sys.env)._1)
       .appName("graft-smoke")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.warnIfOverridden(spark, 8, "Smoke")
     var failures = 0
     def check(name: String, cond: Boolean, detail: String): Unit = {
       println(s"[smoke] ${if (cond) "OK  " else "FAIL"} $name: $detail")

@@ -296,10 +296,8 @@ object DataGen {
     import graft.ops.Dedup
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") < 2000)
-    // d_minhash_pairs: numHashes=64, shingleK=1 (same sig filter as minhashLsh)
-    docs.select(col("doc_id").as("id"),
-        Dedup.minhashSignature(Dedup.shingles(col("text"), 1), 64).as("sig"))
-      .filter(size(col("sig")) > 0 && !exists(col("sig"), _.isNull))
+    // d_minhash_pairs: numHashes=64, shingleK=1 (the signature frame minhashLsh uses)
+    Dedup.signatures(docs, "text", "doc_id", 64, 1)
       .write.mode("overwrite").parquet(MinhashSigFixturePath)
     // d_simhash_pairs: shingleK=2
     docs.select(col("doc_id").as("id"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the hot per-row kernels.
@@ -127,10 +128,13 @@ object HashMix {
   }
   /** FNV-1a 64 over UTF8 bytes — deterministic base hash for shingles. */
   def hashUtf8(s: UTF8String): Long = {
-    val bytes = s.getBytes
+    // reads the bytes in place; `getBytes` would copy every shingle
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
     var h = 0xcbf29ce484222325L
     var i = 0
-    while (i < bytes.length) { h = (h ^ (bytes(i) & 0xffL)) * 0x100000001b3L; i += 1 }
+    while (i < n) { h = (h ^ (Platform.getByte(base, off + i) & 0xffL)) * 0x100000001b3L; i += 1 }
     h
   }
 }
@@ -140,7 +144,8 @@ object HashMix {
   * `numHashes` mixes per shingle — the classic one-hash + derived-permutation
   * scheme. */
 case class MinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   private val seeds: Array[Long] =
     Array.tabulate(numHashes)(j => HashMix.mix(0x9e3779b97f4a7c15L * (j + 1)))
@@ -158,7 +163,8 @@ case class MinHashSig(child: Expression, numHashes: Int)
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    // primitive-backed: GenericArrayData(Array[Long]) boxes every slot
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -166,6 +172,71 @@ case class MinHashSig(child: Expression, numHashes: Int)
     nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** LSH band keys of a MinHash signature: array<long> of `bands` keys, where
+  * band b's key is xxhash64 (seed 42) of the decimal slot values of slice b
+  * (`numHashes / bands` slots) joined by ",". That is bit-for-bit
+  * `xxhash64(array_join(transform(slice(sig, b*r+1, r), cast string), ","))`,
+  * the formula stored band tables and streaming state are keyed with, but
+  * built in one byte buffer per row instead of `bands` interpreted
+  * string chains. As in that formula, null slots are skipped and a slice past
+  * the end of a short signature hashes the empty string. */
+case class MinHashBandHashes(child: Expression, numHashes: Int, bands: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(bands > 0 && numHashes > 0 && numHashes % bands == 0,
+    "bands must be positive and divide numHashes")
+  override def inputTypes = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  private val rows = numHashes / bands
+  def compute(sig: ArrayData): ArrayData = {
+    val n = sig.numElements()
+    // 20 bytes hold any long in decimal, plus one separator per slot
+    val buf = new Array[Byte](rows * 21)
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var len = 0
+      var i = b * rows
+      val end = math.min(i + rows, n)
+      while (i < end) {
+        if (!sig.isNullAt(i)) {
+          if (len > 0) { buf(len) = ','; len += 1 }
+          len = MinHashBandHashes.putDecimal(sig.getLong(i), buf, len)
+        }
+        i += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bandHashes", this, classOf[MinHashBandHashes].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
+  }
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object MinHashBandHashes {
+  private val MinLong = Long.MinValue.toString.getBytes("US-ASCII")
+  /** Writes `Long.toString(v)` as ASCII at `pos`; returns the end offset. */
+  def putDecimal(v: Long, buf: Array[Byte], pos: Int): Int = {
+    if (v == Long.MinValue) {
+      System.arraycopy(MinLong, 0, buf, pos, MinLong.length)
+      return pos + MinLong.length
+    }
+    var p = pos
+    var x = v
+    if (x < 0) { buf(p) = '-'; p += 1; x = -x }
+    var digits = 1
+    var t = x
+    while (t >= 10) { t /= 10; digits += 1 }
+    var q = p + digits - 1
+    while (q >= p) { buf(q) = ('0' + (x % 10)).toByte; x /= 10; q -= 1 }
+    p + digits
+  }
 }
 
 /** SimHash64 over string shingles: bit i of the result is the sign of the
@@ -579,7 +650,9 @@ case class ArrayLastNotEq(child: Expression, skip: Long) extends UnaryExpression
   * joined by single spaces. Replaces a 5-op HOF pipeline
   * (regexp_replace→split→filter→transform/slice/array_join→distinct), each
   * stage of which re-walks the text with interpreted lambdas. */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   def compute(s: UTF8String): ArrayData = {
     val text = s.toString
@@ -598,9 +671,15 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
     if (k <= 1) {
       words.foreach(out.add)
     } else {
+      // one reused builder per row: no per-shingle slice or mkString
+      val g = new java.lang.StringBuilder(64)
       var j = 0
       while (j + k <= words.length) {
-        out.add(words.slice(j, j + k).mkString(" "))
+        g.setLength(0)
+        g.append(words(j))
+        var t = 1
+        while (t < k) { g.append(' ').append(words(j + t)); t += 1 }
+        out.add(g.toString)
         j += 1
       }
     }
@@ -623,7 +702,8 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   * (signatures are fixed-width by construction; a mismatch means corrupt
   * input, not "compare the shorter prefix"). */
 case class LongArrayEqCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
   /** Caller guarantees equal lengths (the null case is handled outside). */
@@ -662,7 +742,9 @@ case class LongArrayEqCount(left: Expression, right: Expression)
   * away) an O(|a∩b|) string array per scored pair. One hash-set build per
   * side, a counter, zero per-pair output allocation. */
 case class StringArrayIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes =
+    Seq(ArrayType(StringType), ArrayType(StringType))
   override def dataType: DataType = IntegerType
   def compute(a: ArrayData, b: ArrayData): Int = {
     val nb = b.numElements()
@@ -833,6 +915,8 @@ object VecFunctions {
   def vec_norm(a: Column): Column = c(VecNorm(e(a)))
   def minhash_sig(shingles: Column, numHashes: Int): Column =
     c(MinHashSig(e(shingles), numHashes))
+  def minhash_band_hashes(sig: Column, numHashes: Int, bands: Int): Column =
+    c(MinHashBandHashes(e(sig), numHashes, bands))
   def simhash64(shingles: Column): Column = c(SimHash64(e(shingles)))
   def sign_lsh_bands(vec: Column, bands: Int, planesPerBand: Int): Column =
     c(SignLshBands(e(vec), bands, planesPerBand))

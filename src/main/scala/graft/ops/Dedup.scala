@@ -53,17 +53,22 @@ object Dedup {
   def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
     graft.functions.VecFunctions.minhash_sig(shinglesCol, numHashes)
 
-  /** band_hash columns: hash of the signature slice for each band (bands
-    * is a compile-time constant → unrolled, stays inside codegen). The ONE
-    * derivation shared by the batch LSH, the incremental-against ops, AND
-    * the streaming near-dup state key (StreamValidate calls this directly)
-    * — band keys can never drift between them. */
-  private[graft] def bandHashCols(sigCol: String, numHashes: Int, bands: Int): Seq[Column] = {
-    val rowsPerBand = numHashes / bands
-    (0 until bands).map { b =>
-      xxhash64(array_join(transform(slice(col(sigCol), b * rowsPerBand + 1, rowsPerBand),
-        _.cast(StringType)), ","))
-    }
+  /** The (id, sig) MinHash signature frame: the ONE derivation shared by
+    * the batch LSH, the band table, the streaming near-dup candidates
+    * (StreamValidate) and the LSH fixture writer. A row has a signature iff
+    * its text is non-null: for `numHashes > 0` MinHashSig fills every slot
+    * (an empty shingle set gives all `Long.MaxValue`), so those are exactly
+    * the rows where `size(sig) > 0 && !exists(sig, isNull)` holds. The
+    * filter must test the text, below the projection: a filter on `sig` is
+    * pushed beneath the projection with the kernel substituted once per
+    * reference, and FilterExec does no subexpression elimination, so each
+    * row would be shingled and MinHashed once per reference. */
+  private[graft] def signatures(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, shingleK: Int): DataFrame = {
+    require(numHashes > 0, "numHashes must be positive")
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        minhashSignature(shingles(col(textCol), shingleK), numHashes).as("sig"))
   }
 
   /** MinHash + LSH near-dup candidate pairs.
@@ -75,9 +80,9 @@ object Dedup {
     * At 100 TB the only heavy op is the band-bucket shuffle; bucket sizes are
     * bounded by near-dup cluster sizes. A `maxBucket` guard drops
     * pathological buckets (boilerplate explosions) rather than letting one
-    * reducer quadratically blow up — dropped bucket count is reported by the
-    * caller via the returned frame's `oversized` marker rows being absent
-    * (count them with the companion stats if needed).
+    * reducer quadratically blow up; the number of dropped buckets is logged
+    * at WARN. The bucket sizes are counted at call time (one job, which
+    * also fills the signature caches); the pairs themselves stay lazy.
     */
   def minhashLsh(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
@@ -96,26 +101,23 @@ object Dedup {
     * with no owner accretes cache across multi-pass sessions. Call the
     * handle once the returned pairs are fully materialized (afterwards the
     * pairs frame can still recompute from source if partitions are lost —
-    * release only drops the cached blocks). */
+    * release only drops the cached blocks). Like [[minhashLsh]], it runs
+    * the bucket-size job at call time. */
   def minhashLshCached(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 1000): (DataFrame, () => Unit) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // persisted: referenced by band explode AND the two signature re-joins —
     // without it every branch recomputes shingling+hashing from the text
-    val sig = df.select(
-      col(idCol).as("id"),
-      minhashSignature(shingles(col(textCol), shingleK), numHashes).as("sig"))
-      .filter(size(col("sig")) > 0 && !exists(col("sig"), _.isNull))
-      .persist()
+    val sig = signatures(df, textCol, idCol, numHashes, shingleK).persist()
 
     // banded persisted TOO: it feeds the oversized-bucket aggregation AND
-    // both sides of the candidate join — unpersisted, the band-hash kernel
-    // (one string-join + xxhash64 per band per row) re-ran per consumer
-    // (3×). At (id, band, band_hash) it is narrower than the already-cached
+    // both sides of the candidate join, so unpersisted, the band-key kernel
+    // (one buffer of `bands` xxhash64s per row) would re-run once per
+    // consumer (3×). At (id, band, band_hash) it is narrower than the
     // signature frame, and both caches ride the same release handle.
     val banded = sig.select(col("id"),
-      posexplode(array(bandHashCols("sig", numHashes, bands): _*))
+      posexplode(graft.functions.VecFunctions.minhash_band_hashes(col("sig"), numHashes, bands))
         .as(Seq("band", "band_hash")))
       .persist()
 
@@ -123,11 +125,27 @@ object Dedup {
     // buckets, bounded by maxBucket. Only (id, band, band_hash) rides the
     // candidate shuffle — signatures re-attach to the deduped pairs.
     // oversized-bucket guard via groupBy + broadcast anti-join: cheaper and
-    // more scalable than a window count (no per-partition sort), and the
-    // oversized set is tiny by construction
-    val oversized = banded.groupBy("band", "band_hash").agg(count(lit(1)).as("n"))
+    // more scalable than a window count (no per-partition sort). The
+    // oversized set is tiny by construction (it is broadcast anyway), so it
+    // is collected ONCE at call time: lazy, each side of the self-join would
+    // re-run the `bands`-rows-per-document bucket count (Spark does not
+    // reuse that exchange), and the common empty set skips the anti-join.
+    // This call-time job also fills both caches. No silent caps: a drop is
+    // logged.
+    val oversizedKeys = banded.groupBy("band", "band_hash").agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select("band", "band_hash")
-    val bucketed = banded.join(broadcast(oversized), Seq("band", "band_hash"), "left_anti")
+    val oversized = oversizedKeys.collect()
+    val bucketed =
+      if (oversized.isEmpty) banded
+      else {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"minhashLsh: dropping ${oversized.length} band bucket(s) larger than " +
+            s"maxBucket=$maxBucket (boilerplate guard) — near-dups sharing ONLY " +
+            "those buckets are not paired")
+        val keys = df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(oversized: _*), oversizedKeys.schema)
+        banded.join(broadcast(keys), Seq("band", "band_hash"), "left_anti")
+      }
     val l = bucketed.select(col("band"), col("band_hash"), col("id").as("id_a"))
     val r = bucketed.select(col("band"), col("band_hash"), col("id").as("id_b"))
     val candidates = l.join(r, Seq("band", "band_hash")).filter(col("id_a") < col("id_b"))
@@ -220,16 +238,31 @@ object Dedup {
 
   /** Exact n-gram Jaccard for a PRE-COMPUTED candidate-pair frame
     * (id_a, id_b) — the verification stage after [[minhashLsh]] /
-    * [[simhashPairs]]. Linear in |candidates|: two hash joins re-attach the
-    * gram sets, no self-join, no quadratic block risk. */
+    * [[simhashPairs]]. Linear in |candidates|: no self-join, no quadratic
+    * block risk. Only CANDIDATE documents are shingled: the distinct
+    * candidate ids broadcast-semi-filter `df` first (the
+    * [[dropNearDupsAgainst]] pattern), so each pair side shingles the
+    * candidate documents, not the whole corpus. The candidate frame is read
+    * TWICE (its id set, then the pairs), so pass a materialized frame
+    * (localCheckpoint'ed or cached); a lazy one re-runs its whole lineage
+    * per read. BROADCAST CLIFF: the distinct
+    * candidate ids (8 bytes each for long ids) ride a broadcast, as in the
+    * ingest gate — far under the broadcast limit at any realistic
+    * duplicate rate, but a corpus where most of 10^9 documents are
+    * candidates should verify by blocks ([[ngramJaccard]]) instead. */
   def ngramJaccardFor(df: DataFrame, textCol: String, idCol: String,
       candidates: DataFrame, shingleK: Int = 1, minJaccard: Double = 0.8,
       minContainment: Option[Double] = None): DataFrame = {
-    val grams = df.select(col(idCol).as("id"), shingles(col(textCol), shingleK).as("grams"))
     val pairs = candidates.select("id_a", "id_b")
+    val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("__cid"))
+      .distinct()
+    val grams = df
+      .join(broadcast(candIds), df(idCol) === candIds("__cid"), "left_semi")
+      .select(col(idCol).as("id"), shingles(col(textCol), shingleK).as("grams"))
+    val joined = pairs
       .join(grams.select(col("id").as("id_a"), col("grams").as("g_a")), Seq("id_a"))
       .join(grams.select(col("id").as("id_b"), col("grams").as("g_b")), Seq("id_b"))
-    scorePairs(pairs, minJaccard, minContainment)
+    scorePairs(joined, minJaccard, minContainment)
   }
 
   /** A pair passes on symmetric Jaccard ≥ minJaccard OR — when
@@ -606,18 +639,32 @@ object Dedup {
   def dropNearDups(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
-    val (candidates, releaseLsh) = minhashLshCached(df, textCol, idCol, numHashes,
-      bands, shingleK, threshold, maxBucket)
+    val cand = lshCandidates(df, textCol, idCol, numHashes, bands, shingleK,
+      threshold, maxBucket)
     // the verified pair frame is read exactly ONCE — by ccEdges' init
-    // checkpoint (the loop then iterates on checkpoints) — so the former
-    // persist only added a cache write of the pair set; distinct by
-    // construction (candidates are dropDuplicates'd, verification is
-    // equi-joins + filters, id_a < id_b strictly)
-    val verified = ngramJaccardFor(df, textCol, idCol, candidates, shingleK, threshold)
+    // checkpoint (the loop then iterates on checkpoints) — so it is not
+    // persisted; distinct by construction (candidates are dropDuplicates'd,
+    // verification is equi-joins + filters, id_a < id_b strictly)
+    val verified = ngramJaccardFor(df, textCol, idCol, cand, shingleK, threshold)
       .select("id_a", "id_b")
     val losers = componentLosers(verified, pairsDistinct = true)
-    releaseLsh()
+    freeLocalCheckpoint(cand)
     df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+  }
+
+  /** The [[minhashLshCached]] candidate pairs (id_a, id_b), checkpointed:
+    * [[ngramJaccardFor]] reads them twice, and the LSH caches are released
+    * as soon as the checkpoint exists (the pairs are small — bounded by the
+    * near-dup rate — while the signature caches hold the whole corpus).
+    * The caller frees the checkpoint via [[freeLocalCheckpoint]] once a
+    * later checkpoint or stage write has materialized everything it feeds. */
+  private def lshCandidates(df: DataFrame, textCol: String, idCol: String,
+      numHashes: Int, bands: Int, shingleK: Int, threshold: Double,
+      maxBucket: Int): DataFrame = {
+    val (candidates, releaseLsh) = minhashLshCached(df, textCol, idCol, numHashes,
+      bands, shingleK, threshold, maxBucket)
+    try candidates.select("id_a", "id_b").localCheckpoint(true)
+    finally releaseLsh()
   }
 
   /** Near-dup CLUSTER REPORT — the audit companion to [[dropNearDups]]:
@@ -630,17 +677,17 @@ object Dedup {
   def nearDupClusters(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
-    val (candidates, releaseLsh) = minhashLshCached(df, textCol, idCol, numHashes,
-      bands, shingleK, threshold, maxBucket)
+    val cand = lshCandidates(df, textCol, idCol, numHashes, bands, shingleK,
+      threshold, maxBucket)
     // single-read pair frame: no persist (see dropNearDups), distinct by
     // construction
-    val verified = ngramJaccardFor(df, textCol, idCol, candidates, shingleK, threshold)
+    val verified = ngramJaccardFor(df, textCol, idCol, cand, shingleK, threshold)
       .select("id_a", "id_b")
     // label-identical report derived from the CC edge set — skips the full
     // label construction; the report checkpoint is the same bounded
     // pay-per-defect residual as before
     val report = componentReport(verified, pairsDistinct = true)
-    releaseLsh()
+    freeLocalCheckpoint(cand)
     report
   }
 
@@ -738,11 +785,9 @@ object Dedup {
   def minhashBandTable(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    df.select(col(idCol).as("id"),
-        minhashSignature(shingles(col(textCol), shingleK), numHashes).as("sig"))
-      .filter(size(col("sig")) > 0 && !exists(col("sig"), _.isNull))
+    signatures(df, textCol, idCol, numHashes, shingleK)
       .select(col("id"),
-        posexplode(array(bandHashCols("sig", numHashes, bands): _*))
+        posexplode(graft.functions.VecFunctions.minhash_band_hashes(col("sig"), numHashes, bands))
           .as(Seq("band", "band_hash")))
   }
 
@@ -911,19 +956,20 @@ object Dedup {
       stages: graft.StageRunner,
       numHashes: Int = 128, bands: Int = 32, shingleK: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
-    // the release handle escapes the compute block so the LSH signature
-    // cache is dropped AFTER the stage write materialized it (if the stage
+    // the candidate checkpoint escapes the compute block so it is freed
+    // AFTER the stage write materialized the verified pairs (if the stage
     // was already done, compute never runs and this stays a no-op)
-    var releaseLsh: () => Unit = () => ()
+    var candInMem: Option[DataFrame] = None
     val verified = stages.stage("verified_pairs",
         Seq("lsh_verify", textCol, idCol, numHashes, bands, shingleK, threshold, maxBucket)) {
-      val (candidates, release) = minhashLshCached(df, textCol, idCol,
-        numHashes, bands, shingleK, threshold, maxBucket)
-      releaseLsh = release
-      ngramJaccardFor(df, textCol, idCol, candidates, shingleK, threshold)
+      val cand = lshCandidates(df, textCol, idCol, numHashes, bands, shingleK,
+        threshold, maxBucket)
+      candInMem = Some(cand)
+      ngramJaccardFor(df, textCol, idCol, cand, shingleK, threshold)
         .select("id_a", "id_b")
     }
-    releaseLsh() // stage read is storage-backed; no lineage into the cache
+    // stage read is storage-backed; no lineage into the checkpoint
+    candInMem.foreach(freeLocalCheckpoint)
     // same pattern for CC's internal localCheckpoint blocks: the stage write
     // materializes the labels, so the in-memory copy can be dropped
     var ccInMem: Option[DataFrame] = None

@@ -41,6 +41,14 @@ object GraftSession {
   private[graft] def selectMaster(cores: Int, env: collection.Map[String, String]): (String, Boolean) =
     env.get(MasterEnv).fold((s"local[$cores]", false))(m => (m, true))
 
+  /** Logs a WARN naming `caller` when `spark` runs under a [[MasterEnv]]
+    * override of `local[cores]`. Call it once the session exists: before
+    * that, Spark has not loaded its log4j profile and the WARN is dropped. */
+  private[graft] def warnIfOverridden(spark: SparkSession, cores: Int, caller: String): Unit =
+    if (selectMaster(cores, sys.env)._2)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$caller: master '${spark.sparkContext.master}' from $MasterEnv replaces local[$cores]")
+
   /** Local development/test session at `cores` threads.
     *
     * SPARK_GRAFT_MASTER (optional) overrides the master URL so the SAME
@@ -51,14 +59,12 @@ object GraftSession {
     * active override is logged at WARN, so a run under another master
     * says so. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val (master, overridden) = selectMaster(cores, sys.env)
-    if (overridden)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"GraftSession.local: master '$master' from $MasterEnv replaces local[$cores]")
-    val s = tuned(SparkSession.builder().master(master).appName(appName), cores)
+    val s = tuned(SparkSession.builder().master(selectMaster(cores, sys.env)._1)
+        .appName(appName), cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    warnIfOverridden(s, cores, "GraftSession.local")
     s
   }
 }

@@ -257,17 +257,14 @@ object StreamValidate {
     import spark.implicits._
     implicit val stEnc: Encoder[BandBucketState] = Encoders.product[BandBucketState]
     implicit val outEnc: Encoder[NearDupCandidate] = Encoders.product[NearDupCandidate]
-    val sig = stream
-      .select(col(idCol).cast(org.apache.spark.sql.types.StringType).as("id"),
-        graft.ops.Dedup.minhashSignature(
-          graft.ops.Dedup.shingles(col(textCol), shingleK), numHashes).as("sig"))
-      .filter(col("id").isNotNull && size(col("sig")) > 0 &&
-        !exists(col("sig"), _.isNull))
-    // the band-hash derivation is THE shared one (Dedup.bandHashCols) —
-    // stream-side and batch-side band keys can never drift
+    // the signature frame and the band-key kernel are THE ones the batch op
+    // uses — stream-side and batch-side band keys can never drift
+    val sig = graft.ops.Dedup.signatures(stream.filter(col(idCol).isNotNull),
+        textCol, idCol, numHashes, shingleK)
+      .select(col("id").cast(org.apache.spark.sql.types.StringType).as("id"), col("sig"))
     val banded = sig
       .select(col("id"), col("sig"),
-        posexplode(array(graft.ops.Dedup.bandHashCols("sig", numHashes, bands): _*))
+        posexplode(graft.functions.VecFunctions.minhash_band_hashes(col("sig"), numHashes, bands))
           .as(Seq("band", "band_hash")))
       .select(col("band"), col("band_hash"), col("id"), col("sig"))
       .as[(Int, Long, String, Seq[Long])]
