@@ -60,7 +60,8 @@ private[functions] object TextTok {
   }
 }
 
-case class RepetitionStats(child: Expression) extends UnaryExpression {
+case class RepetitionStats(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = RepetitionStats.schema
 
   def compute(s: UTF8String): InternalRow = {
@@ -174,7 +175,8 @@ object RepetitionStats {
   * determinism. The in-row aggregation is what keeps TF computation off the
   * shuffle: an explode→groupBy(doc, term) formulation shuffles every token
   * occurrence, this shuffles nothing. */
-case class WordCounts(child: Expression) extends UnaryExpression {
+case class WordCounts(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("term", StringType, nullable = false),
@@ -203,298 +205,18 @@ case class WordCounts(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Fixed-point unigram log-likelihood over a token array — the scoring
-  * kernel of the KenLM-style quality filter (CCNet's perplexity gate,
-  * Wenzek et al. 2020, with a unigram model in place of the 5-gram KenLM).
-  * The vocabulary (term -> corpus count) is a BOUNDED driver-side map
-  * (top-V terms), embedded in the expression and shipped once per executor
-  * via the codegen reference object — scoring is a zero-shuffle projection.
-  *
-  * Per token: `round(ln(count / total) * 1e6)` summed as a long
-  * (out-of-vocabulary terms score with count 1). Fixed-point per-term
-  * rounding makes the sum order-independent and lets a SQL oracle derive
-  * the identical integer from the same corpus. Returns
-  * struct(logprob_fp, n_tok); empty arrays yield (0, 0).
-  */
-case class UnigramLogProbFp(
-    child: Expression, vocab: Map[String, Long], total: Long)
-    extends UnaryExpression {
-  require(total > 0, "total token count must be positive")
-  override def dataType: DataType = StructType(Seq(
-    StructField("logprob_fp", LongType, nullable = false),
-    StructField("n_tok", LongType, nullable = false)))
-
-  @transient private lazy val fpByTerm: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](vocab.size * 2)
-    vocab.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t),
-        java.lang.Long.valueOf(math.round(math.log(c.toDouble / total) * 1e6)))
-    }
-    m
-  }
-  @transient private lazy val oovFp: Long =
-    math.round(math.log(1.0 / total) * 1e6)
-
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData): InternalRow = {
-    val n = a.numElements()
-    var sum = 0L
-    var scored = 0L
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val fp = fpByTerm.get(a.getUTF8String(i))
-        sum += (if (fp == null) oovFp else fp.longValue())
-        scored += 1
-      }
-      i += 1
-    }
-    InternalRow(sum, scored)
-  }
-  override def nullSafeEval(x: Any): Any =
-    compute(x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramLp", this, classOf[UnigramLogProbFp].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Fixed-point INTERPOLATED-BIGRAM log-likelihood over a token array — the
-  * deeper CCNet-style scorer. Token i scores
-  * `ln(0.5 * c(prev,cur)/c(prev) + 0.5 * c(cur)/N)` when `prev` is IN the
-  * unigram vocabulary; the first token, and any token whose predecessor is
-  * out-of-vocabulary, backs off to the plain unigram `ln(c(cur)/N)` (an
-  * OOV-prev denominator fallback would make the bigram term exceed 1 and
-  * emit POSITIVE log-likelihoods — backoff, not fabricated context).
-  * Out-of-vocabulary `cur` counts as 1; absent bigrams as 0. Per-term
-  * values round to the 1e-6 grid and sum as a long. Both vocabularies are
-  * BOUNDED driver-side maps shipped once per executor; scoring stays a
-  * zero-shuffle projection with UTF8String-keyed lookups (no per-token
-  * String/concat churn — the bigram map is two-level prev -> cur -> count)
-  * and precomputed fixed-point unigram scores for the backoff path. The
-  * 0.5 weight is dyadic so the arithmetic mirrors exactly in a SQL oracle.
-  * Constructor bigram keys join prev and cur with U+0001. Returns
-  * struct(logprob_fp, n_tok). */
-case class BigramLogProbFp(
-    child: Expression, unigrams: Map[String, Long], bigrams: Map[String, Long],
-    total: Long) extends UnaryExpression {
-  require(total > 0, "total token count must be positive")
-  override def dataType: DataType = StructType(Seq(
-    StructField("logprob_fp", LongType, nullable = false),
-    StructField("n_tok", LongType, nullable = false)))
-
-  // counts for the interpolated path
-  @transient private lazy val uniCnt: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](unigrams.size * 2)
-    unigrams.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t), java.lang.Long.valueOf(c)) }
-    m
-  }
-  // precomputed fixed-point unigram scores for the backoff path
-  @transient private lazy val uniFp: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](unigrams.size * 2)
-    unigrams.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t),
-        java.lang.Long.valueOf(math.round(math.log(c.toDouble / total) * 1e6))) }
-    m
-  }
-  @transient private lazy val oovFp: Long =
-    math.round(math.log(1.0 / total) * 1e6)
-  // two-level prev -> cur -> count (constructor keys are U+0001-joined)
-  @transient private lazy val biCnt
-      : java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]] = {
-    val m = new java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]()
-    bigrams.foreach { case (k, c) =>
-      val sep = k.indexOf('\u0001')
-      require(sep > 0, s"malformed bigram key: $k")
-      val prev = UTF8String.fromString(k.substring(0, sep))
-      val cur = UTF8String.fromString(k.substring(sep + 1))
-      m.computeIfAbsent(prev, _ => new java.util.HashMap[UTF8String, java.lang.Long]())
-        .put(cur, java.lang.Long.valueOf(c))
-    }
-    m
-  }
-
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData): InternalRow = {
-    val n = a.numElements()
-    var sum = 0L
-    var scored = 0L
-    var prev: UTF8String = null
-    var prevCnt: java.lang.Long = null
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val cur = a.getUTF8String(i)
-        val cuBoxed = uniCnt.get(cur)
-        if (prevCnt == null) {
-          // first token or OOV predecessor: plain unigram (precomputed fp)
-          val fp = if (cuBoxed == null) oovFp else uniFp.get(cur).longValue()
-          sum += fp
-        } else {
-          val cu = if (cuBoxed == null) 1L else cuBoxed.longValue()
-          val curMap = biCnt.get(prev)
-          val cbBoxed = if (curMap == null) null else curMap.get(cur)
-          val cb = if (cbBoxed == null) 0L else cbBoxed.longValue()
-          val p = 0.5 * (cb.toDouble / prevCnt.longValue()) +
-            0.5 * (cu.toDouble / total)
-          sum += math.round(math.log(p) * 1e6)
-        }
-        scored += 1
-        prev = cur
-        prevCnt = cuBoxed
-      }
-      i += 1
-    }
-    InternalRow(sum, scored)
-  }
-  override def nullSafeEval(x: Any): Any =
-    compute(x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramLp", this, classOf[BigramLogProbFp].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Fixed-point INTERPOLATED-TRIGRAM log-likelihood — one rung past
-  * [[BigramLogProbFp]] toward CCNet's 5-gram KenLM. Token i scores by the
-  * LONGEST available context:
-  *  - trigram interpolation `ln(0.5·c3(p2,p1,cur)/c2(p2,p1) +
-  *    0.25·c2(p1,cur)/c1(p1) + 0.25·c1(cur)/N)` when p1 is in-vocab and
-  *    (p2,p1) is a known bigram — every ratio <= 1 (exact counts of kept
-  *    keys, numerator's support nested in denominator's) and the dyadic
-  *    weights sum to 1, so p stays in (0,1];
-  *  - the bigram interpolation `0.5·c2/c1 + 0.5·c1/N` when only p1 is
-  *    known (identical arithmetic to [[BigramLogProbFp]]'s middle path);
-  *  - plain unigram backoff otherwise (first token / OOV predecessor).
-  * Absent bigrams/trigrams count 0; OOV `cur` counts 1. Per-term values
-  * round to the 1e-6 grid and sum as a long — order-independent and
-  * SQL-oracle-reproducible (left-associated `a*x + b*y + c*z` exactly as
-  * written). All maps are BOUNDED driver-side vocabularies shipped once
-  * per executor (nested UTF8String-keyed lookups, no per-token concat);
-  * scoring is a zero-shuffle projection. Constructor n-gram keys join
-  * components with U+0001. Returns struct(logprob_fp, n_tok). */
-case class TrigramLogProbFp(
-    child: Expression, unigrams: Map[String, Long], bigrams: Map[String, Long],
-    trigrams: Map[String, Long], total: Long) extends UnaryExpression {
-  require(total > 0, "total token count must be positive")
-  override def dataType: DataType = StructType(Seq(
-    StructField("logprob_fp", LongType, nullable = false),
-    StructField("n_tok", LongType, nullable = false)))
-
-  @transient private lazy val uniCnt: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](unigrams.size * 2)
-    unigrams.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t), java.lang.Long.valueOf(c)) }
-    m
-  }
-  @transient private lazy val uniFp: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](unigrams.size * 2)
-    unigrams.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t),
-        java.lang.Long.valueOf(math.round(math.log(c.toDouble / total) * 1e6))) }
-    m
-  }
-  @transient private lazy val oovFp: Long =
-    math.round(math.log(1.0 / total) * 1e6)
-  // two-level prev -> cur -> count
-  @transient private lazy val biCnt
-      : java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]] = {
-    val m = new java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]()
-    bigrams.foreach { case (k, c) =>
-      val sep = k.indexOf('\u0001')
-      require(sep > 0, s"malformed bigram key: $k")
-      val prev = UTF8String.fromString(k.substring(0, sep))
-      val cur = UTF8String.fromString(k.substring(sep + 1))
-      m.computeIfAbsent(prev, _ => new java.util.HashMap[UTF8String, java.lang.Long]())
-        .put(cur, java.lang.Long.valueOf(c))
-    }
-    m
-  }
-  // three-level p2 -> p1 -> cur -> count
-  @transient private lazy val triCnt: java.util.HashMap[UTF8String,
-      java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]] = {
-    val m = new java.util.HashMap[UTF8String,
-      java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]]()
-    trigrams.foreach { case (k, c) =>
-      val s1 = k.indexOf('\u0001')
-      val s2 = k.indexOf('\u0001', s1 + 1)
-      require(s1 > 0 && s2 > s1, s"malformed trigram key: $k")
-      val p2 = UTF8String.fromString(k.substring(0, s1))
-      val p1 = UTF8String.fromString(k.substring(s1 + 1, s2))
-      val cur = UTF8String.fromString(k.substring(s2 + 1))
-      m.computeIfAbsent(p2,
-          _ => new java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]())
-        .computeIfAbsent(p1, _ => new java.util.HashMap[UTF8String, java.lang.Long]())
-        .put(cur, java.lang.Long.valueOf(c))
-    }
-    m
-  }
-
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData): InternalRow = {
-    val n = a.numElements()
-    var sum = 0L
-    var scored = 0L
-    var p1: UTF8String = null // previous token
-    var p1Cnt: java.lang.Long = null // its unigram count (null = OOV/none)
-    var p2: UTF8String = null // the token before that
-    var prefCnt: java.lang.Long = null // bigram count of (p2, p1), null = unknown
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val cur = a.getUTF8String(i)
-        val cuBoxed = uniCnt.get(cur)
-        if (p1Cnt == null) {
-          sum += (if (cuBoxed == null) oovFp else uniFp.get(cur).longValue())
-        } else {
-          val cu = if (cuBoxed == null) 1L else cuBoxed.longValue()
-          val curMap = biCnt.get(p1)
-          val cbBoxed = if (curMap == null) null else curMap.get(cur)
-          val cb = if (cbBoxed == null) 0L else cbBoxed.longValue()
-          val p =
-            if (prefCnt == null)
-              0.5 * (cb.toDouble / p1Cnt.longValue()) + 0.5 * (cu.toDouble / total)
-            else {
-              val m1 = triCnt.get(p2)
-              val m2 = if (m1 == null) null else m1.get(p1)
-              val ctBoxed = if (m2 == null) null else m2.get(cur)
-              val ct = if (ctBoxed == null) 0L else ctBoxed.longValue()
-              0.5 * (ct.toDouble / prefCnt.longValue()) +
-                0.25 * (cb.toDouble / p1Cnt.longValue()) + 0.25 * (cu.toDouble / total)
-            }
-          sum += math.round(math.log(p) * 1e6)
-        }
-        scored += 1
-        // shift context: the NEW (p2, p1) is (old p1, cur)
-        prefCnt = {
-          val m = if (p1 == null) null else biCnt.get(p1)
-          if (m == null) null else m.get(cur)
-        }
-        p2 = p1
-        p1 = cur
-        p1Cnt = cuBoxed
-      }
-      i += 1
-    }
-    InternalRow(sum, scored)
-  }
-  override def nullSafeEval(x: Any): Any =
-    compute(x.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("trigramLp", this, classOf[TrigramLogProbFp].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 /** One node of the shared n-gram count trie backing [[NgramLogProbFp]]:
   * `count` is the exact corpus count of the path's n-gram if that n-gram
   * was KEPT in its level's bounded vocabulary, or -1 when the node exists
   * only as the prefix of a longer kept n-gram (its own count fell outside
   * the top-K — "unknown", which breaks the context chain there exactly the
-  * way a NULL join against that level's vocabulary does in the oracle). */
+  * way a NULL join against that level's vocabulary does in the oracle).
+  * A kept level-1 node also carries `fp`, its precomputed fixed-point
+  * unigram score `round(ln(count / N) * 1e6)`, so a token with no known
+  * context scores with the one lookup that finds its node. */
 private[functions] final class NgramTrieNode {
   var count: Long = -1L
+  var fp: Long = 0L
   var children: java.util.HashMap[UTF8String, NgramTrieNode] = null
   def child(k: UTF8String): NgramTrieNode =
     if (children == null) null else children.get(k)
@@ -506,12 +228,13 @@ private[functions] final class NgramTrieNode {
   }
 }
 
-/** Fixed-point interpolated ORDER-N log-likelihood — the parameterized
-  * generalization of [[UnigramLogProbFp]] / [[BigramLogProbFp]] /
-  * [[TrigramLogProbFp]] to any n-gram order (order 5 = the published CCNet
-  * filter shape, a 5-gram KenLM; Wenzek et al. 2020). `grams(j)` holds the
-  * bounded (j+1)-gram vocabulary (U+0001-joined keys -> exact corpus
-  * counts); `order = grams.length`.
+/** Fixed-point interpolated ORDER-N log-likelihood — the one scoring
+  * kernel of the CCNet-style quality filter (Wenzek et al. 2020) at every
+  * n-gram order: order 1 is the plain unigram model, orders 2 and 3 the
+  * interpolated bigram and trigram models, order 5 the published CCNet
+  * filter shape (a 5-gram KenLM). `grams(j)` holds the bounded
+  * (j+1)-gram vocabulary (U+0001-joined keys -> exact corpus counts);
+  * `order = grams.length`.
   *
   * Token scoring dispatches on the LONGEST available context: L = the
   * largest j such that the context counts c_1(p_1), c_2(p_2,p_1), …,
@@ -526,14 +249,14 @@ private[functions] final class NgramTrieNode {
   * sum to 1, so p stays in (0,1]; the dyadic weights and fixed left
   * association make the IEEE arithmetic mirror exactly in SQL. L = 0
   * (first token / OOV predecessor) scores the plain unigram. Per-term
-  * values round to the 1e-6 grid and sum as a long (order-independent).
+  * values round to the 1e-6 grid and sum as a long (order-independent),
+  * mirrored by the t_unigram_lp / t_bigram_lp / t_trigram_lp oracles.
   *
-  * For orders 1-3 this reproduces the dedicated kernels bit-for-bit
-  * (asserted in Round5Spec). All vocabularies live in ONE trie built
-  * lazily from the expression's maps; scoring is a zero-shuffle
-  * projection with O(order) pointer-walk lookups per token and zero
-  * per-token allocation (context nodes roll forward — the new length-j
-  * context node is the old length-(j-1) node's `cur` child).
+  * All vocabularies live in ONE trie built lazily from the expression's
+  * maps; scoring is a zero-shuffle projection with O(order) pointer-walk
+  * lookups per token and zero per-token allocation (context nodes roll
+  * forward — the new length-j context node is the old length-(j-1) node's
+  * `cur` child).
   *
   * MODEL-SIZE budget: the maps serialize inside the expression and the
   * transient trie rebuilds per deserialized task instance, so total
@@ -547,7 +270,8 @@ private[functions] final class NgramTrieNode {
   * per-language reference models. Returns struct(logprob_fp, n_tok). */
 case class NgramLogProbFp(
     child: Expression, grams: Seq[Map[String, Long]], total: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(StringType))
   require(total > 0, "total token count must be positive")
   require(grams.nonEmpty, "need at least the unigram vocabulary")
   def order: Int = grams.length
@@ -580,7 +304,8 @@ case class NgramLogProbFp(
 case class NgramLogProbFpBroadcast(
     child: Expression,
     model: org.apache.spark.broadcast.Broadcast[(Seq[Map[String, Long]], Long)])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
     StructField("logprob_fp", LongType, nullable = false),
     StructField("n_tok", LongType, nullable = false)))
@@ -597,9 +322,10 @@ case class NgramLogProbFpBroadcast(
 }
 
 /** The order-N scoring core shared by the embedded and broadcast kernels:
-  * trie + precomputed unigram backoff scores + the longest-context
-  * dispatch loop. Built eagerly at construction; never serialized (each
-  * kernel decides how the MAPS travel and when to build). */
+  * trie (level-1 nodes carrying their precomputed unigram backoff scores)
+  * + the longest-context dispatch loop. Built eagerly at construction;
+  * never serialized (each kernel decides how the MAPS travel and when to
+  * build). */
 private[functions] final class NgramScorer(grams: Seq[Map[String, Long]], total: Long) {
   require(total > 0, "total token count must be positive")
   require(grams.nonEmpty, "need at least the unigram vocabulary")
@@ -616,18 +342,11 @@ private[functions] final class NgramScorer(grams: Seq[Map[String, Long]], total:
         var node = r
         parts.foreach(p => node = node.ensureChild(UTF8String.fromString(p)))
         node.count = c
+        if (level == 0) node.fp = math.round(math.log(c.toDouble / total) * 1e6)
       }
       level += 1
     }
     r
-  }
-  // precomputed fixed-point unigram scores for the L=0 backoff path
-  private val uniFp: java.util.HashMap[UTF8String, java.lang.Long] = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](grams.head.size * 2)
-    grams.head.foreach { case (t, c) =>
-      m.put(UTF8String.fromString(t),
-        java.lang.Long.valueOf(math.round(math.log(c.toDouble / total) * 1e6))) }
-    m
   }
   private val oovFp: Long =
     math.round(math.log(1.0 / total) * 1e6)
@@ -647,7 +366,7 @@ private[functions] final class NgramScorer(grams: Seq[Map[String, Long]], total:
         val curUni = root.child(cur)
         val curKnown = curUni != null && curUni.count >= 0
         if (chain == 0) {
-          sum += (if (curKnown) uniFp.get(cur).longValue() else oovFp)
+          sum += (if (curKnown) curUni.fp else oovFp)
         } else {
           val cu = if (curKnown) curUni.count else 1L
           var w = 0.5
@@ -729,15 +448,6 @@ object TextFunctions {
     GraftShim.column(RepetitionStats(GraftShim.expression(text)))
   def word_counts(text: Column): Column =
     GraftShim.column(WordCounts(GraftShim.expression(text)))
-  def unigram_logprob_fp(tokens: Column, vocab: Map[String, Long], total: Long): Column =
-    GraftShim.column(UnigramLogProbFp(GraftShim.expression(tokens), vocab, total))
-  def bigram_logprob_fp(tokens: Column, unigrams: Map[String, Long],
-      bigrams: Map[String, Long], total: Long): Column =
-    GraftShim.column(BigramLogProbFp(GraftShim.expression(tokens), unigrams, bigrams, total))
-  def trigram_logprob_fp(tokens: Column, unigrams: Map[String, Long],
-      bigrams: Map[String, Long], trigrams: Map[String, Long], total: Long): Column =
-    GraftShim.column(TrigramLogProbFp(GraftShim.expression(tokens), unigrams, bigrams,
-      trigrams, total))
   def ngram_logprob_fp(tokens: Column, grams: Seq[Map[String, Long]], total: Long): Column =
     GraftShim.column(NgramLogProbFp(GraftShim.expression(tokens), grams, total))
   def ngram_logprob_fp_broadcast(tokens: Column,

@@ -300,7 +300,7 @@ case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
       out(b) = v
       b += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -803,7 +803,7 @@ case class TokenNgramHashes(child: Expression, n: Int)
     child.dataType.asInstanceOf[ArrayType].containsNull
   def compute(x: ArrayData): ArrayData = {
     val len = x.numElements()
-    if (len < n) return new GenericArrayData(Array.empty[Long])
+    if (len < n) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
     val out = new java.util.LinkedHashSet[java.lang.Long]()
     var i = 0
     while (i + n <= len) {
@@ -824,7 +824,7 @@ case class TokenNgramHashes(child: Expression, n: Int)
     val it = out.iterator()
     var m = 0
     while (it.hasNext) { arr(m) = it.next(); m += 1 }
-    new GenericArrayData(arr)
+    UnsafeArrayData.fromPrimitiveArray(arr)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -895,7 +895,7 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]], 
     }
     val p = math.min(nprobe, n)
     val idx = Array.range(0, n).sortBy(i => (d(i), i)).take(p)
-    new GenericArrayData(idx)
+    UnsafeArrayData.fromPrimitiveArray(idx)
   }
   override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[ArrayData])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   *   score_fp = Σ_t round(ln(c_pos(t)/N_pos)·1e6) − round(ln(c_neg(t)/N_neg)·1e6)
   *
-  * i.e. the difference of two [[graft.functions.UnigramLogProbFp]] sums —
-  * the per-term fixed-point log-likelihood-ratio of the two class models.
+  * i.e. the difference of two order-1 [[graft.functions.NgramLogProbFp]]
+  * sums — the per-term fixed-point log-likelihood-ratio of the two class
+  * models.
   * Out-of-vocabulary terms score count 1 under BOTH classes, so OOV mass
   * mostly cancels (it contributes the class-size prior ln(N_neg/N_pos) per
   * token). Positive scores mean "looks like the positive class".

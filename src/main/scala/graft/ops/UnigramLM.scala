@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * combine) -> TakeOrdered(V) — the only shuffle is on term keys, and the
   * driver holds just the top-V vocabulary (V ~ 10^4-10^5 at production
   * scale). Scoring is a ZERO-shuffle projection: the vocab rides to
-  * executors inside [[graft.functions.UnigramLogProbFp]], so at 100 TB it
-  * runs at scan speed. All scores are fixed-point integers (per-term
+  * executors inside [[graft.functions.NgramLogProbFp]] (the one LM kernel;
+  * the unigram model is its order-1 case), so at 100 TB it runs at scan
+  * speed. All scores are fixed-point integers (per-term
   * `round(ln(c/N)*1e6)`), order-independent and SQL-oracle-reproducible.
   */
 object UnigramLM {
@@ -30,8 +31,8 @@ object UnigramLM {
     * count (including out-of-vocabulary tokens, which score as count 1). */
   case class Model(vocab: Map[String, Long], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
-    def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.unigram_logprob_fp(tokensCol, vocab, totalTokens)
+    def ngram: NgramModel = NgramModel(Seq(vocab), totalTokens)
+    def logProbFp(tokensCol: Column): Column = ngram.logProbFp(tokensCol)
   }
 
   /** Train on a corpus. Vocabulary ties at the V boundary break
@@ -44,11 +45,8 @@ object UnigramLM {
   /** Attach `logprob_fp` (fixed-point total log-likelihood) and `n_tok`
     * (scored token count) to every row. Documents with no tokens score
     * (0, 0); null text yields null columns. */
-  def score(df: DataFrame, textCol: String, model: Model): DataFrame = {
-    val st = model.logProbFp(tokens(col(textCol)))
-    df.withColumn("logprob_fp", st("logprob_fp"))
-      .withColumn("n_tok", st("n_tok"))
-  }
+  def score(df: DataFrame, textCol: String, model: Model): DataFrame =
+    scoreNgram(df, textCol, model.ngram)
 
   /** Interpolated-bigram model: unigram vocabulary + top-B bigram counts.
     * Token i scores `ln(0.5·c(prev,cur)/c(prev) + 0.5·c(cur)/N)` when the
@@ -58,9 +56,8 @@ object UnigramLM {
   case class BigramModel(unigrams: Map[String, Long], bigrams: Map[String, Long],
       totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
-    def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.bigram_logprob_fp(
-        tokensCol, unigrams, bigrams, totalTokens)
+    def ngram: NgramModel = NgramModel(Seq(unigrams, bigrams), totalTokens)
+    def logProbFp(tokensCol: Column): Column = ngram.logProbFp(tokensCol)
   }
 
   /** Train unigram + bigram vocabularies. Ties at either V boundary break
@@ -94,11 +91,8 @@ object UnigramLM {
   }
 
   /** Attach bigram-interpolated `logprob_fp` and `n_tok`. */
-  def scoreBigram(df: DataFrame, textCol: String, model: BigramModel): DataFrame = {
-    val st = model.logProbFp(tokens(col(textCol)))
-    df.withColumn("logprob_fp", st("logprob_fp"))
-      .withColumn("n_tok", st("n_tok"))
-  }
+  def scoreBigram(df: DataFrame, textCol: String, model: BigramModel): DataFrame =
+    scoreNgram(df, textCol, model.ngram)
 
   /** Interpolated-TRIGRAM model — the next rung toward CCNet's 5-gram
     * KenLM. Token i scores, by longest available context:
@@ -112,9 +106,8 @@ object UnigramLM {
   case class TrigramModel(unigrams: Map[String, Long], bigrams: Map[String, Long],
       trigrams: Map[String, Long], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
-    def logProbFp(tokensCol: Column): Column =
-      graft.functions.TextFunctions.trigram_logprob_fp(
-        tokensCol, unigrams, bigrams, trigrams, totalTokens)
+    def ngram: NgramModel = NgramModel(Seq(unigrams, bigrams, trigrams), totalTokens)
+    def logProbFp(tokensCol: Column): Column = ngram.logProbFp(tokensCol)
   }
 
   /** Train unigram + bigram + trigram vocabularies (same deterministic
@@ -128,11 +121,8 @@ object UnigramLM {
   }
 
   /** Attach trigram-interpolated `logprob_fp` and `n_tok`. */
-  def scoreTrigram(df: DataFrame, textCol: String, model: TrigramModel): DataFrame = {
-    val st = model.logProbFp(tokens(col(textCol)))
-    df.withColumn("logprob_fp", st("logprob_fp"))
-      .withColumn("n_tok", st("n_tok"))
-  }
+  def scoreTrigram(df: DataFrame, textCol: String, model: TrigramModel): DataFrame =
+    scoreNgram(df, textCol, model.ngram)
 
   /** ORDER-N interpolated model — the full generalization of the ladder
     * (order 5 = the published CCNet filter shape, a 5-gram KenLM).
@@ -140,8 +130,8 @@ object UnigramLM {
     * on the longest available context with dyadic weights
     * `0.5, 0.25, …, 0.5^L` (the unigram term sharing the lowest weight) —
     * see [[graft.functions.NgramLogProbFp]] for the exact arithmetic.
-    * Orders 1-3 reproduce [[Model]]/[[BigramModel]]/[[TrigramModel]]
-    * bit-for-bit (Round5Spec asserts it). */
+    * [[Model]], [[BigramModel]] and [[TrigramModel]] are its order-1, -2
+    * and -3 views (`ngram`) and score through it. */
   case class NgramModel(grams: Seq[Map[String, Long]], totalTokens: Long) {
     require(totalTokens > 0, "empty training corpus")
     def order: Int = grams.length
@@ -192,11 +182,13 @@ object UnigramLM {
   }
 
   /** Attach order-N interpolated `logprob_fp` and `n_tok`. */
-  def scoreNgram(df: DataFrame, textCol: String, model: NgramModel): DataFrame = {
-    val st = model.logProbFp(tokens(col(textCol)))
+  def scoreNgram(df: DataFrame, textCol: String, model: NgramModel): DataFrame =
+    withScore(df, model.logProbFp(tokens(col(textCol))))
+
+  /** Unpack a scoring kernel's struct into `logprob_fp` and `n_tok`. */
+  private def withScore(df: DataFrame, st: Column): DataFrame =
     df.withColumn("logprob_fp", st("logprob_fp"))
       .withColumn("n_tok", st("n_tok"))
-  }
 
   /** EXECUTOR-SHARED order-N model: the vocabulary maps ride a Spark
     * broadcast and the scoring trie builds once per executor JVM — same
@@ -221,11 +213,8 @@ object UnigramLM {
 
   /** [[scoreNgram]] over the executor-shared model form. */
   def scoreNgramBroadcast(df: DataFrame, textCol: String,
-      model: BroadcastNgramModel): DataFrame = {
-    val st = model.logProbFp(tokens(col(textCol)))
-    df.withColumn("logprob_fp", st("logprob_fp"))
-      .withColumn("n_tok", st("n_tok"))
-  }
+      model: BroadcastNgramModel): DataFrame =
+    withScore(df, model.logProbFp(tokens(col(textCol))))
 
   /** Keep rows whose AVERAGE per-token log-likelihood is at least
     * `minAvgFp` (fixed-point, e.g. -9_000_000 = avg ln-prob >= -9.0), in

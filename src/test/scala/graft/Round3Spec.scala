@@ -1063,18 +1063,18 @@ class Round3Spec extends SparkSpec {
       ("x x x x x x\ny y\ny y\nz", 1),
       ("one two three two three two three four five six seven", 2),
       ("", 3)).toDF("text", "id")
+    val uni = Map("x" -> 5L, "two" -> 2L)
+    val bi = Map("x\u0001x" -> 3L)
     def evalAll(mode: String): Seq[String] = {
       val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       try df.select(concat_ws("|",
           repetition_stats(col("text")).cast("string"),
           graft.functions.TextFunctions.word_counts(col("text")).cast("string"),
-          graft.functions.TextFunctions.unigram_logprob_fp(
-            split(col("text"), " "), Map("x" -> 5L, "two" -> 2L), 10L)
-            .cast("string"),
-          graft.functions.TextFunctions.bigram_logprob_fp(
-            split(col("text"), " "), Map("x" -> 5L, "two" -> 2L),
-            Map("x\u0001x" -> 3L), 10L).cast("string")).as("s"))
+          graft.functions.TextFunctions.ngram_logprob_fp(
+            split(col("text"), " "), Seq(uni), 10L).cast("string"),
+          graft.functions.TextFunctions.ngram_logprob_fp(
+            split(col("text"), " "), Seq(uni, bi), 10L).cast("string")).as("s"))
         .collect().map(_.getString(0)).toSeq
       finally prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)

@@ -419,7 +419,7 @@ class Round4Spec extends SparkSpec {
     assert(scored.getLong(0) === expected && scored.getLong(1) === 3L)
   }
 
-  test("TrigramLogProbFp compiles under FORCED codegen, matching interpreted eval") {
+  test("trigram scoring compiles under FORCED codegen, matching interpreted eval") {
     import graft.ops.UnigramLM
     val trainDf = Seq((1L, "a b c a b c a b d")).toDF("doc_id", "text")
     val m = UnigramLM.trainTrigram(trainDf, "text", 10, 10, 10)

@@ -70,7 +70,35 @@ class Round5Spec extends SparkSpec {
     assert(scored.getLong(0) === expected && scored.getLong(1) === 2L)
   }
 
-  test("NgramModel orders 1-3 reproduce the dedicated kernels bit-for-bit") {
+  /** Test-local reference for `NgramLogProbFp`'s documented formula: plain
+    * `Map` lookups over U+0001-joined keys, no trie. Token i's context
+    * length L is the largest j <= order-1 whose context n-grams of lengths
+    * 1..j are all kept; it scores `ln(0.5·r_L + … + 0.5^L·r_1 +
+    * 0.5^L·c_1(cur)/N)` (absent numerators 0, OOV `cur` counts 1), or the
+    * plain unigram when L = 0. */
+  private def referenceScore(grams: Seq[Map[String, Long]], total: Long,
+      toks: Seq[String]): Long = {
+    def c(ws: Seq[String]): Option[Long] = grams(ws.length - 1).get(ws.mkString("\u0001"))
+    toks.indices.map { i =>
+      val cur = toks(i)
+      val ctx = (j: Int) => toks.slice(i - j, i)
+      val l = (1 to math.min(grams.length - 1, i)).takeWhile(j => c(ctx(j)).isDefined)
+        .lastOption.getOrElse(0)
+      val cu = c(Seq(cur)).getOrElse(1L)
+      if (l == 0) fp(cu.toDouble / total)
+      else {
+        var p = 0.0
+        var w = 0.5
+        for (j <- l to 1 by -1) {
+          p += w * (c(ctx(j) :+ cur).getOrElse(0L).toDouble / c(ctx(j)).get)
+          if (j > 1) w *= 0.5
+        }
+        fp(p + w * (cu.toDouble / total))
+      }
+    }.sum
+  }
+
+  test("NgramModel orders 1-3 match a map-based reference scorer") {
     import graft.ops.UnigramLM
     val docs = spark.range(0, 300).selectExpr("id AS doc_id",
       """concat('the quick tok', cast(id % 23 AS STRING),
@@ -86,16 +114,30 @@ class Round5Spec extends SparkSpec {
     assert(n1.grams.head === uni.vocab && n1.totalTokens === uni.totalTokens)
     assert(n2.grams(1) === bi.bigrams)
     assert(n3.grams(2) === tri.trigrams)
-    // …and identical scores from the generalized kernel
+    // …the 60/80 caps leave truncation holes in the bigram and trigram
+    // levels (65 and 104 distinct keys; the 28 unigrams all fit)…
+    val full = UnigramLM.trainNgram(docs, "text", Seq(1000, 1000, 1000))
+    assert(full.grams.map(_.size) === Seq(28, 65, 104))
+    // …and a bigram cap of 20 keeps trigrams whose context bigram is
+    // truncated, so the trie holds context nodes of unknown count
+    val holes = UnigramLM.trainNgram(docs, "text", Seq(40, 20, 80))
+    assert(holes.grams(2).keys.exists(k =>
+      !holes.grams(1).contains(k.split('\u0001').take(2).mkString("\u0001"))))
+    // …and every scorer equals the reference, document by document
+    val toks = docs.select(col("doc_id"), UnigramLM.tokens(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
       df.select("doc_id", "logprob_fp", "n_tok").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-    assert(scores(UnigramLM.scoreNgram(docs, "text", n1))
-      === scores(UnigramLM.score(docs, "text", uni)))
-    assert(scores(UnigramLM.scoreNgram(docs, "text", n2))
-      === scores(UnigramLM.scoreBigram(docs, "text", bi)))
-    assert(scores(UnigramLM.scoreNgram(docs, "text", n3))
-      === scores(UnigramLM.scoreTrigram(docs, "text", tri)))
+    def reference(m: UnigramLM.NgramModel): Seq[(Long, Long, Long)] =
+      toks.toSeq.map { case (id, t) =>
+        (id, referenceScore(m.grams, m.totalTokens, t), t.length.toLong) }.sorted
+    Seq(n1, n2, n3, holes).foreach { m =>
+      assert(scores(UnigramLM.scoreNgram(docs, "text", m)) === reference(m), m.order)
+    }
+    assert(scores(UnigramLM.score(docs, "text", uni)) === reference(uni.ngram))
+    assert(scores(UnigramLM.scoreBigram(docs, "text", bi)) === reference(bi.ngram))
+    assert(scores(UnigramLM.scoreTrigram(docs, "text", tri)) === reference(tri.ngram))
   }
 
   test("NgramLogProbFp compiles under FORCED codegen, matching interpreted eval") {
@@ -115,6 +157,36 @@ class Round5Spec extends SparkSpec {
       }
     }
     assert(eval("CODEGEN_ONLY") === eval("NO_CODEGEN"))
+  }
+
+  test("the text and LM kernels reject a bad input type at analysis") {
+    import graft.functions.TextFunctions
+    val df = Seq((1, "a b c", Seq(1L, 2L), Seq("a", "b"))).toDF("n", "text", "longs", "strs")
+    val grams = Seq(Map("a" -> 2L, "b" -> 1L), Map("a\u0001b" -> 1L))
+    val bc = spark.sparkContext.broadcast((grams, 3L))
+    try {
+      val bad: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+        "repetition_stats" -> TextFunctions.repetition_stats(col("n")),
+        "word_counts" -> TextFunctions.word_counts(col("strs")),
+        "ngram_logprob_fp(string)" -> TextFunctions.ngram_logprob_fp(col("text"), grams, 3L),
+        "ngram_logprob_fp(array<bigint>)" ->
+          TextFunctions.ngram_logprob_fp(col("longs"), grams, 3L),
+        "ngram_logprob_fp_broadcast" ->
+          TextFunctions.ngram_logprob_fp_broadcast(col("longs"), bc))
+      bad.foreach { case (name, c) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
+        assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")
+      }
+      // the well-typed forms still analyze and run
+      val ok = df.select(
+        TextFunctions.repetition_stats(col("text"))("n_words"),
+        size(TextFunctions.word_counts(col("text"))),
+        TextFunctions.ngram_logprob_fp(col("strs"), grams, 3L)("n_tok"),
+        TextFunctions.ngram_logprob_fp_broadcast(col("strs"), bc)("logprob_fp"),
+        TextFunctions.ngram_logprob_fp(col("strs"), grams, 3L)("logprob_fp")).head()
+      assert((ok.getLong(0), ok.getInt(1), ok.getLong(2)) === ((3L, 3, 2L)))
+      assert(ok.getLong(3) === ok.getLong(4))
+    } finally bc.destroy()
   }
 
   test("BroadcastNgramModel: identical scores, trie built once per JVM, codegen-safe") {
