@@ -169,6 +169,64 @@ object RepetitionStats {
     StructType(fieldNames.map(StructField(_, LongType, nullable = false)))
 }
 
+/** The Gopher repetition gate over a [[RepetitionStats]] struct as ONE
+  * expression whose only child is the struct. The same gate as Column
+  * algebra references the struct once per field, and `FilterExec` does no
+  * subexpression elimination, so a filter on it ran the stats kernel once
+  * per reference; here a `Filter` runs it once, and a `Project` that also
+  * selects the flat fields shares that one evaluation. The inequalities
+  * are the multiply-form MassiveText thresholds documented on
+  * `TextAnalysis.gopherPass`, tested left to right with `&&` exactly as
+  * the Column form's `And` chain; each product overflows the way Spark's
+  * `*` does (an ARITHMETIC_OVERFLOW error under ANSI, wrapping without).
+  * A null struct gives null; its fields are read as the non-null longs
+  * [[RepetitionStats]] produces. */
+case class GopherPass(child: Expression,
+    failOnOverflow: Boolean = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    extends UnaryExpression with ExpectsInputTypes {
+  import GopherPass._
+  override def inputTypes = Seq(RepetitionStats.schema)
+  override def dataType: DataType = BooleanType
+
+  private def mul(a: Long, b: Long): Long =
+    if (failOnOverflow) org.apache.spark.sql.catalyst.util.MathUtils.multiplyExact(a, b)
+    else a * b
+
+  def compute(s: InternalRow): Boolean = {
+    val wordChars = s.getLong(WordChars)
+    s.getLong(NWords) > 0 &&
+      mul(s.getLong(DupLines), 10) <= mul(s.getLong(NLines), 3) &&
+      mul(s.getLong(DupLineChars), 5) <= s.getLong(LineChars) &&
+      mul(s.getLong(Top2Chars), 5) <= wordChars &&
+      mul(s.getLong(Top3Chars), 100) <= mul(wordChars, 18) &&
+      mul(s.getLong(Top4Chars), 100) <= mul(wordChars, 16) &&
+      mul(s.getLong(Dup5CovChars), 100) <= mul(wordChars, 15) &&
+      mul(s.getLong(Dup10CovChars), 10) <= wordChars
+  }
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[InternalRow])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("gopherPass", this, classOf[GopherPass].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
+  }
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object GopherPass {
+  private def ordinal(f: String): Int = RepetitionStats.fieldNames.indexOf(f)
+  private val NLines = ordinal("n_lines")
+  private val DupLines = ordinal("dup_lines")
+  private val DupLineChars = ordinal("dup_line_chars")
+  private val LineChars = ordinal("line_chars")
+  private val NWords = ordinal("n_words")
+  private val WordChars = ordinal("word_chars")
+  private val Top2Chars = ordinal("top2_chars")
+  private val Top3Chars = ordinal("top3_chars")
+  private val Top4Chars = ordinal("top4_chars")
+  private val Dup5CovChars = ordinal("dup5_cov_chars")
+  private val Dup10CovChars = ordinal("dup10_cov_chars")
+}
+
 /** Per-document term frequencies in ONE pass: distinct words (same
   * tokenization as [[RepetitionStats]] — simple-lowercase code points in
   * `[a-z0-9]`) with their in-document counts, sorted by term for
@@ -446,6 +504,8 @@ object TextFunctions {
   import org.apache.spark.sql.GraftShim
   def repetition_stats(text: Column): Column =
     GraftShim.column(RepetitionStats(GraftShim.expression(text)))
+  def gopher_pass(stats: Column): Column =
+    GraftShim.column(GopherPass(GraftShim.expression(stats)))
   def word_counts(text: Column): Column =
     GraftShim.column(WordCounts(GraftShim.expression(text)))
   def ngram_logprob_fp(tokens: Column, grams: Seq[Map[String, Long]], total: Long): Column =

@@ -50,6 +50,10 @@ object VecGetter {
     case ArrayType(ByteType, _) => (a, i) => a.getByte(i).toDouble
     case other => throw new IllegalArgumentException(s"non-numeric array: $other")
   }
+  /** The array types [[forType]] reads, for kernels that check their input
+    * at analysis (`ExpectsInputTypes`). */
+  val inputType = org.apache.spark.sql.GraftShim.anyOf(
+    Seq(FloatType, DoubleType, IntegerType, LongType, ShortType, ByteType).map(ArrayType(_)): _*)
 }
 
 /** dot(a, b) over two numeric arrays, accumulated in double. Mismatched
@@ -316,18 +320,10 @@ case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
   * `doGenCode`: the S1 scan projection keeps this check as a primitive loop
   * inside whole-stage codegen instead of an interpreted-eval island. */
 case class ArrayAllInRange(child: Expression, lo: Double, hi: Double)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = BooleanType
-  @transient private lazy val getter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case LongType => (a, i) => a.getLong(i).toDouble
-      case ShortType => (a, i) => a.getShort(i).toDouble
-      case FloatType => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case ByteType => (a, i) => a.getByte(i).toDouble
-      case other => throw new IllegalStateException(s"non-numeric array: $other")
-    }
+  override def inputTypes = Seq(VecGetter.inputType)
+  @transient private lazy val getter = VecGetter.forType(child.dataType)
   @transient private lazy val mayContainNull =
     child.dataType.asInstanceOf[ArrayType].containsNull
   override def nullSafeEval(a: Any): Any = {
@@ -379,18 +375,10 @@ case class ArrayAllInRange(child: Expression, lo: Double, hi: Double)
   * presence with NonNull). Backs per-group OOV-rate drift over token
   * arrays: one codegen'd pass per row, no explode, no HOF lambda. */
 case class ArrayCountOutOfRange(child: Expression, lo: Double, hi: Double)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
-  @transient private lazy val getter: (ArrayData, Int) => Double =
-    child.dataType.asInstanceOf[ArrayType].elementType match {
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case LongType => (a, i) => a.getLong(i).toDouble
-      case ShortType => (a, i) => a.getShort(i).toDouble
-      case FloatType => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case ByteType => (a, i) => a.getByte(i).toDouble
-      case other => throw new IllegalStateException(s"non-numeric array: $other")
-    }
+  override def inputTypes = Seq(VecGetter.inputType)
+  @transient private lazy val getter = VecGetter.forType(child.dataType)
   @transient private lazy val mayContainNull =
     child.dataType.asInstanceOf[ArrayType].containsNull
   override def nullSafeEval(a: Any): Any = {
@@ -447,6 +435,10 @@ object IntGetter {
     case ArrayType(ByteType, _) => (a, i) => a.getByte(i).toLong
     case other => throw new IllegalArgumentException(s"non-integral array: $other")
   }
+  /** The array types [[forType]] reads, for kernels that check their input
+    * at analysis (`ExpectsInputTypes`). */
+  val inputType = org.apache.spark.sql.GraftShim.anyOf(
+    Seq(IntegerType, LongType, ShortType, ByteType).map(ArrayType(_)): _*)
 }
 
 /** COUNT of array elements equal to `target` (exact integral equality) —
@@ -454,7 +446,9 @@ object IntGetter {
   * size(arr) - ArrayCountEq(arr, pad), computed without materializing an
   * `array_remove` copy of an 8k-token array per row. A null ELEMENT never
   * equals anything; a null ARRAY is null (leaf null-stance). */
-case class ArrayCountEq(child: Expression, target: Long) extends UnaryExpression {
+case class ArrayCountEq(child: Expression, target: Long)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(IntGetter.inputType)
   override def dataType: DataType = LongType
   @transient private lazy val getter = IntGetter.forType(child.dataType)
   @transient private lazy val mayContainNull =
@@ -494,7 +488,9 @@ case class ArrayCountEq(child: Expression, target: Long) extends UnaryExpression
   * ELEMENT counts as non-pad (corruption after padding began is a layout
   * violation, not an absent slot); empty and all-pad arrays are trivially
   * ok. One forward pass, no allocation. */
-case class ArrayPadSuffixOk(child: Expression, pad: Long) extends UnaryExpression {
+case class ArrayPadSuffixOk(child: Expression, pad: Long)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(IntGetter.inputType)
   override def dataType: DataType = BooleanType
   @transient private lazy val getter = IntGetter.forType(child.dataType)
   @transient private lazy val mayContainNull =
@@ -546,7 +542,8 @@ case class ArrayPadSuffixOk(child: Expression, pad: Long) extends UnaryExpressio
   * whole array. Null elements count as ordinary tokens (their validity is
   * elemRange's job). One forward pass, no allocation. */
 case class ArrayBadSegmentCount(child: Expression, sep: Long, minLen: Long, maxLen: Long)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(IntGetter.inputType)
   override def dataType: DataType = LongType
   @transient private lazy val getter = IntGetter.forType(child.dataType)
   @transient private lazy val mayContainNull =
@@ -602,7 +599,9 @@ case class ArrayBadSegmentCount(child: Expression, sep: Long, minLen: Long, maxL
   * NULL when the array is null, empty, all-pad, or all-null: there is no
   * last real token to report (EOS checks coalesce that to a violation).
   * Null elements are skipped here — their validity is elemRange's job. */
-case class ArrayLastNotEq(child: Expression, skip: Long) extends UnaryExpression {
+case class ArrayLastNotEq(child: Expression, skip: Long)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(IntGetter.inputType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   @transient private lazy val getter = IntGetter.forType(child.dataType)

@@ -20,7 +20,15 @@ object Pipeline {
     * Scale shape: the audit is ONE narrow scan (all gates evaluated in a
     * single projection, then a tiny groupBy over |stages|+1 keys) and the
     * survivor frame is one filter over the same scan — no joins, no wide
-    * shuffles, each frame independently consumable. */
+    * shuffles, each frame independently consumable.
+    *
+    * Both frames are lazy: every action on either one re-reads `df` and
+    * re-evaluates every gate. Persist the survivors when several actions
+    * consume them. A gate written as Column algebra over several fields of
+    * one kernel's struct (`k(x)("a") > 0 && k(x)("b") < 9`) re-runs that
+    * kernel once per field reference inside the survivors' `Filter`, which
+    * shares no subexpressions; give such a gate one expression over the
+    * struct, as [[TextAnalysis.gopherPass]] does. */
   def filterWithAudit(df: DataFrame, stages: Seq[(String, Column)])
       : (DataFrame, DataFrame) = {
     require(stages.nonEmpty, "at least one stage")
@@ -52,8 +60,9 @@ object Pipeline {
     * nothing to say about them — gate them upstream with length checks).
     *
     * `exact = true` uses the order-statistic thresholds (driver collects
-    * the SAMPLE, `maxSample`-guarded) and scores the corpus exactly once:
-    * the scored rows (text included) are persisted MEMORY_AND_DISK, the
+    * the SAMPLE, `maxSample`-guarded) and scores each document exactly
+    * once: the scored rows (text included, tokenless rows too; they are
+    * dropped above the cache) are persisted MEMORY_AND_DISK, the
     * threshold sample materializes that cache, and the counts — at most
     * |languages| × 3 rows — are computed from it AT CALL TIME and returned
     * as a local frame, so a language missing from the sample fails here.
@@ -68,19 +77,25 @@ object Pipeline {
       exact: Boolean = false): (DataFrame, DataFrame) = {
     require(keep.nonEmpty && keep.subsetOf(Set("head", "middle", "tail")),
       s"keep must be a nonempty subset of head/middle/tail: $keep")
-    val scored = UnigramLM.scoreNgram(docs, textCol, model)
+    def withPpl(scored: DataFrame): DataFrame = scored
       .filter(col("n_tok") > 0)
       .withColumn("ppl_fp",
         UnigramLM.perplexityFp(col("logprob_fp"), col("n_tok")))
     def split(bucketed: DataFrame): (DataFrame, DataFrame) =
       (bucketed.filter(col("bucket").isin(keep.toSeq: _*)),
         bucketed.groupBy(col(langCol), col("bucket")).agg(count(lit(1)).as("n_rows")))
+    val scored = UnigramLM.scoreNgram(docs, textCol, model)
     if (!exact) split(UnigramLM.perplexityBucketsByGroup(
-      scored, idCol, "ppl_fp", langCol, sampleFraction, salt))
+      withPpl(scored), idCol, "ppl_fp", langCol, sampleFraction, salt))
     else {
-      val cached = scored.persist()
-      val release = () => { cached.unpersist(); () }
+      // Cache the scoring projection itself and filter above it: a filter
+      // on `n_tok` beneath the cache would be pushed under the projection
+      // and score every row a second time. `ppl_fp` stays above the
+      // filter (its integer division by a zero `n_tok` fails under ANSI).
+      val scoredCache = scored.persist()
+      val release = () => { scoredCache.unpersist(); () }
       try {
+        val cached = withPpl(scoredCache)
         val (survivors, counts) = split(cached.withColumn("bucket",
           UnigramLM.groupTertiles(cached, idCol, "ppl_fp", langCol,
             sampleFraction, salt, maxSample = 2000000, maxGroups = 10000)))

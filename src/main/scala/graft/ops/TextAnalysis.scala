@@ -120,18 +120,16 @@ object TextAnalysis {
     * published MassiveText ones: duplicate-line fraction <= 0.30, duplicate-
     * line char fraction <= 0.20, top {2,3,4}-gram char fraction <=
     * {0.20, 0.18, 0.16}, duplicated {5,10}-gram char coverage <=
-    * {0.15, 0.10}. Empty documents (no words) fail the gate. */
-  def gopherPass(stats: Column): Column = {
-    val s = stats
-    (s("n_words") > 0) &&
-      (s("dup_lines") * 10 <= s("n_lines") * 3) &&
-      (s("dup_line_chars") * 5 <= s("line_chars")) &&
-      (s("top2_chars") * 5 <= s("word_chars")) &&
-      (s("top3_chars") * 100 <= s("word_chars") * 18) &&
-      (s("top4_chars") * 100 <= s("word_chars") * 16) &&
-      (s("dup5_cov_chars") * 100 <= s("word_chars") * 15) &&
-      (s("dup10_cov_chars") * 10 <= s("word_chars"))
-  }
+    * {0.15, 0.10}. Empty documents (no words) fail the gate; a null struct
+    * (null text) gives null.
+    *
+    * One codegen'd expression ([[graft.functions.GopherPass]]) whose only
+    * child is `stats`, so a `Filter` evaluates the stats kernel once per
+    * row; written as Column algebra over the eleven fields it ran once per
+    * field reference, since `FilterExec` shares no subexpressions. `stats`
+    * must be the [[repetitionStats]] struct (checked at analysis). */
+  def gopherPass(stats: Column): Column =
+    graft.functions.TextFunctions.gopher_pass(stats)
 
   /** Flattened per-document repetition profile + the boolean gate, keyed by
     * `idCol`. */

@@ -160,8 +160,9 @@ class Round5Spec extends SparkSpec {
   }
 
   test("the text and LM kernels reject a bad input type at analysis") {
-    import graft.functions.TextFunctions
-    val df = Seq((1, "a b c", Seq(1L, 2L), Seq("a", "b"))).toDF("n", "text", "longs", "strs")
+    import graft.functions.{TextFunctions, VecFunctions}
+    val df = Seq((1, "a b c", Seq(1L, 2L), Seq("a", "b"), Seq(1.0, 2.0)))
+      .toDF("n", "text", "longs", "strs", "dbls")
     val grams = Seq(Map("a" -> 2L, "b" -> 1L), Map("a\u0001b" -> 1L))
     val bc = spark.sparkContext.broadcast((grams, 3L))
     try {
@@ -172,7 +173,17 @@ class Round5Spec extends SparkSpec {
         "ngram_logprob_fp(array<bigint>)" ->
           TextFunctions.ngram_logprob_fp(col("longs"), grams, 3L),
         "ngram_logprob_fp_broadcast" ->
-          TextFunctions.ngram_logprob_fp_broadcast(col("longs"), bc))
+          TextFunctions.ngram_logprob_fp_broadcast(col("longs"), bc),
+        // a struct that is not the repetition_stats struct
+        "gopher_pass(struct<n:int>)" -> TextFunctions.gopher_pass(struct(col("n"))),
+        "gopher_pass(string)" -> TextFunctions.gopher_pass(col("text")),
+        "array_all_in_range" -> VecFunctions.array_all_in_range(col("strs"), 0, 9),
+        "array_count_out_of_range" -> VecFunctions.array_count_out_of_range(col("strs"), 0, 9),
+        "array_count_eq(array<string>)" -> VecFunctions.array_count_eq(col("strs"), 0L),
+        "array_count_eq(array<double>)" -> VecFunctions.array_count_eq(col("dbls"), 0L),
+        "array_pad_suffix_ok" -> VecFunctions.array_pad_suffix_ok(col("dbls"), 0L),
+        "array_bad_segments" -> VecFunctions.array_bad_segments(col("dbls"), 0L, 1L, 9L),
+        "array_last_not_eq" -> VecFunctions.array_last_not_eq(col("strs"), 0L))
       bad.foreach { case (name, c) =>
         val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
         assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")
@@ -183,9 +194,18 @@ class Round5Spec extends SparkSpec {
         size(TextFunctions.word_counts(col("text"))),
         TextFunctions.ngram_logprob_fp(col("strs"), grams, 3L)("n_tok"),
         TextFunctions.ngram_logprob_fp_broadcast(col("strs"), bc)("logprob_fp"),
-        TextFunctions.ngram_logprob_fp(col("strs"), grams, 3L)("logprob_fp")).head()
+        TextFunctions.ngram_logprob_fp(col("strs"), grams, 3L)("logprob_fp"),
+        TextFunctions.gopher_pass(TextFunctions.repetition_stats(col("text"))),
+        VecFunctions.array_all_in_range(col("dbls"), 0, 9),
+        VecFunctions.array_count_out_of_range(col("longs"), 0, 1),
+        VecFunctions.array_count_eq(col("longs"), 2L),
+        VecFunctions.array_pad_suffix_ok(col("longs"), 2L),
+        VecFunctions.array_bad_segments(col("longs"), 2L, 1L, 9L),
+        VecFunctions.array_last_not_eq(col("longs"), 2L)).head()
       assert((ok.getLong(0), ok.getInt(1), ok.getLong(2)) === ((3L, 3, 2L)))
       assert(ok.getLong(3) === ok.getLong(4))
+      assert((ok.getBoolean(5), ok.getBoolean(6), ok.getLong(7), ok.getLong(8),
+        ok.getBoolean(9), ok.getLong(10), ok.getLong(11)) === ((false, true, 1L, 1L, true, 0L, 1L)))
     } finally bc.destroy()
   }
 
