@@ -1599,9 +1599,10 @@ final case class MonotonicWithin(groupCol: String, orderCol: String,
 }
 
 /** Distribution-drift check: per-group chi-square of a binned numeric column
-  * against the pooled (all-groups) distribution. Fully distributed: bin →
-  * count per (group, bin) → join small aggregates; the chi-square sum runs
-  * over ≤ groups×bins rows. Groups whose χ² exceeds `threshold` violate. */
+  * against the pooled (all-groups) distribution. One scan counts each
+  * (group, bin) cell; the ≤ groups×bins cells are gathered into one row and
+  * finished in one walk ([[Drift.chiSquare]]). Groups whose χ² exceeds
+  * `threshold` violate. */
 final case class DriftChiSquare(valueCol: String, groupCol: String, binWidth: Double,
     threshold: Double) extends AggConstraint {
   val id = s"drift($valueCol by $groupCol)"
@@ -1621,7 +1622,8 @@ final case class DriftChiSquare(valueCol: String, groupCol: String, binWidth: Do
 }
 
 /** Drift via Population Stability Index per group vs pooled (the industry-
-  * standard monitoring statistic; >0.25 conventionally = shifted). */
+  * standard monitoring statistic; >0.25 conventionally = shifted), from the
+  * same one-scan cell table as [[DriftChiSquare]] ([[Drift.psi]]). */
 final case class DriftPSI(valueCol: String, groupCol: String, binWidth: Double,
     threshold: Double = 0.25) extends AggConstraint {
   val id = s"driftPSI($valueCol by $groupCol)"
@@ -1640,7 +1642,9 @@ final case class DriftPSI(valueCol: String, groupCol: String, binWidth: Double,
   }
 }
 
-/** Drift via two-sample Kolmogorov–Smirnov on binned CDFs per group vs pooled. */
+/** Drift via two-sample Kolmogorov–Smirnov on binned CDFs per group vs
+  * pooled, from the same one-scan cell table as [[DriftChiSquare]]
+  * ([[Drift.ks]]). */
 final case class DriftKS(valueCol: String, groupCol: String, binWidth: Double,
     threshold: Double) extends AggConstraint {
   val id = s"driftKS($valueCol by $groupCol)"

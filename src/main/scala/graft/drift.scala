@@ -1,151 +1,150 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import java.util.Arrays.binarySearch
+import java.util.Objects.deepEquals
+
+import scala.math.BigDecimal.RoundingMode
+
+import org.apache.spark.sql.{DataFrame, Encoders, GraftShim, Row}
+import org.apache.spark.sql.catalyst.util.MathUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-/** Distribution-drift statistics, fully distributed.
+/** Distribution-drift statistics.
   *
-  * Strategy (scale-first): bin the numeric column once during a single scan,
-  * aggregate to per-(group, bin) counts — after which everything operates on
-  * at most |groups|×|bins| rows, so the χ²/KS arithmetic joins tiny
-  * aggregates (broadcast) and never touches the fact table again. At 100 TB
-  * the only heavy op is the first groupBy, which benefits from map-side
-  * partial aggregation on a (group, bin) key of modest cardinality.
+  * Strategy (scale-first): one scan bins the numeric column and counts each
+  * (group, bin) cell, with map-side partial aggregation on a key of modest
+  * cardinality — the only heavy op at 100 TB. A global aggregate gathers
+  * those ≤ |groups|×|bins| cells into one row sorted by (group, bin), and one
+  * finisher ([[Drift.finish]]) computes χ², KS and PSI and their fixed-point
+  * twins from it in a single walk. The plan stays lazy (nothing runs until
+  * the caller's action), and every float sum runs in ascending bin order, so
+  * the statistics do not depend on the input's partitioning.
   *
   * The reference has no drift analog (it is a per-value validator); this is
   * the north-rule addition (SURVEY.md §2.4 "drift / stats").
   */
 object Drift {
 
-  /** Per-(group, bin) observed counts plus pooled/bin/group totals, with the
-    * full groups×bins cross filled in (missing cells = 0) so expected counts
-    * are computed for every cell. */
-  private def cells(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double): DataFrame = {
-    val binned = df
-      .filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("grp"),
+  /** Most groups × bins the finisher accepts: above it the statistic fails
+    * and names `binWidth` — never a silent cap. */
+  val MaxCells: Long = 1L << 20
+
+  /** All six per-group statistics in one lazy plan: (grp, chi2, chi2_fp, ks,
+    * ks_fp, psi, psi_fp, grp_total). */
+  private def statistics(df: DataFrame, valueCol: String, groupCol: String,
+      binWidth: Double, minP: Double, scale: Double): DataFrame = {
+    require(minP > 0, s"drift: minP must be > 0, got $minP")
+    val ansi = SQLConf.get.ansiEnabled
+    val out = new StructType().add("grp", df.select(col(groupCol)).schema.head.dataType)
+      .add("chi2", DoubleType).add("chi2_fp", LongType).add("ks", DoubleType).add("ks_fp", LongType)
+      .add("psi", DoubleType).add("psi_fp", LongType).add("grp_total", LongType)
+    df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
+      .groupBy(col(groupCol).as("grp"),
         floor(col(valueCol).cast(DoubleType) / binWidth).cast(LongType).as("bin"))
-    // obs is small (groups × bins) but DERIVED FROM THE FACT TABLE — and it
-    // is referenced four times below (grp totals, bin totals, pooled total,
-    // and the cell join). Unpersisted, each reference re-ran the full
-    // fact-table scan+aggregation (the round-5 seq_validate plan showed the
-    // corpus generated once per reference); persisting the tiny aggregate
-    // makes every drift statistic ONE fact scan. The cache self-releases
-    // after the first action on the statistic (bounded: |groups|·|bins|
-    // rows either way).
-    val obs = binned.groupBy(col("grp"), col("bin")).agg(count(lit(1)).as("obs")).persist()
-    // everything below is driver-free small-data algebra over the cached agg.
-    val grpTot = obs.groupBy("grp").agg(sum("obs").as("grp_total"))
-    val binTot = obs.groupBy("bin").agg(sum("obs").as("bin_total"))
-    val n = obs.agg(sum("obs").as("n_total"))
-    val out = grpTot.crossJoin(broadcast(binTot))
-      .join(obs, Seq("grp", "bin"), "left")
-      .na.fill(0L, Seq("obs"))
-      .crossJoin(broadcast(n))
-    graft.AutoRelease.onFirstMaterialize(out, () => { obs.unpersist(); () })
+      .agg(count(lit(1)).as("obs"))
+      .agg(sort_array(collect_list(struct(col("grp"), col("bin"), col("obs")))))
+      .flatMap(r => finish(r.getSeq[Row](0), binWidth, minP, scale, ansi))(Encoders.row(out))
   }
+
+  /** The finisher: per-group statistics from the (grp, bin, obs) cells
+    * sorted by (grp, bin). Each group is walked over the union of occupied
+    * bins in ascending order, a missing cell counting obs = 0, with
+    * exp = grp_total·bin_total/N. Every cell yields one χ² term, one
+    * |CDF_g − CDF_pool| and one PSI term; the float statistic sums (KS:
+    * maxes) the term as is, the `_fp` twin first applies Spark's
+    * `round(term · scale).cast(long)` — HALF_UP on the double's decimal
+    * form, and under ANSI an overflowing cast or sum raises as in Spark. */
+  private def finish(cells: Seq[Row], binWidth: Double, minP: Double,
+      scale: Double, ansi: Boolean): Iterator[Row] = {
+    val bins = cells.map(_.getLong(1)).distinct.sorted.toArray
+    val starts = cells.indices.filter(i => i == 0 || !deepEquals(cells(i - 1).get(0), cells(i).get(0)))
+    val nCells = starts.length.toLong * bins.length
+    if (nCells > MaxCells) throw new IllegalArgumentException(s"drift: ${starts.length} groups × " +
+      s"${bins.length} bins = $nCells cells exceed the $MaxCells-cell limit; raise binWidth ($binWidth)")
+    val binTotal = new Array[Long](bins.length)
+    cells.foreach(c => binTotal(binarySearch(bins, c.getLong(1))) += c.getLong(2))
+    val n = binTotal.sum
+    def fp(term: Double): Long = {
+      val x = term * scale
+      val r = if (x.isNaN || x.isInfinite) x else BigDecimal(x).setScale(0, RoundingMode.HALF_UP).toDouble
+      if (ansi) GraftShim.doubleToLongExact(r) else r.toLong
+    }
+    def add(a: Long, b: Long): Long = if (ansi) MathUtils.addExact(a, b) else a + b
+    starts.indices.iterator.map { k =>
+      val obs = new Array[Long](bins.length)
+      (starts(k) until (if (k + 1 < starts.length) starts(k + 1) else cells.length)).foreach { i =>
+        obs(binarySearch(bins, cells(i).getLong(1))) = cells(i).getLong(2)
+      }
+      val g = obs.sum
+      var chi2, psi = 0.0
+      var ks = Double.NegativeInfinity
+      var chi2Fp, psiFp, cumObs, cumBin = 0L
+      var ksFp = Long.MinValue
+      for (b <- bins.indices) {
+        val o = obs(b)
+        val bt = binTotal(b)
+        val exp = g.toDouble * bt / n
+        val chiT = if (exp > 0) (o - exp) * (o - exp) / exp else 0.0
+        cumObs += o
+        cumBin += bt
+        val ksT = math.abs(cumObs.toDouble / g - cumBin.toDouble / n)
+        val pG = math.max(o.toDouble / g, minP)
+        val pPool = math.max(bt.toDouble / n, minP)
+        val psiT = (pG - pPool) * StrictMath.log(pG / pPool)
+        chi2 += chiT; chi2Fp = add(chi2Fp, fp(chiT))
+        ks = math.max(ks, ksT); ksFp = math.max(ksFp, fp(ksT))
+        psi += psiT; psiFp = add(psiFp, fp(psiT))
+      }
+      Row(cells(starts(k)).get(0), chi2, chi2Fp, ks, ksFp, psi, psiFp, g)
+    }
+  }
+
+  private def pick(stats: DataFrame, groupCol: String, stat: String): DataFrame =
+    stats.select(col("grp").as(groupCol), col(stat), col("grp_total"))
 
   /** χ² of each group's binned histogram against the pooled distribution:
     * chi2(g) = Σ_bins (obs - exp)² / exp with exp = grp_total·bin_total/N.
     * Returns (groupCol, chi2, grp_total). */
-  def chiSquare(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double): DataFrame = {
-    cells(df, valueCol, groupCol, binWidth)
-      .withColumn("exp", col("grp_total") * col("bin_total") / col("n_total"))
-      .withColumn("term",
-        when(col("exp") > 0, (col("obs") - col("exp")) * (col("obs") - col("exp")) / col("exp"))
-          .otherwise(lit(0.0)))
-      .groupBy(col("grp"))
-      .agg(sum("term").as("chi2"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("chi2"), col("grp_total"))
-  }
+  def chiSquare(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, 1e-6, 1e6), groupCol, "chi2")
 
   /** Two-sample KS on binned CDFs: ks(g) = max_bins |CDF_g(bin) - CDF_pool(bin)|.
     * Returns (groupCol, ks, grp_total). */
-  def ks(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double): DataFrame = {
-    val c = cells(df, valueCol, groupCol, binWidth)
-    val wGrp = Window.partitionBy("grp").orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    c.withColumn("cum_obs", sum("obs").over(wGrp))
-      .withColumn("cum_bin", sum("bin_total").over(wGrp)) // pooled cum within each grp's full bin axis
-      .withColumn("cdf_g", col("cum_obs").cast(DoubleType) / col("grp_total"))
-      .withColumn("cdf_pool", col("cum_bin").cast(DoubleType) / col("n_total"))
-      .groupBy(col("grp"))
-      .agg(max(abs(col("cdf_g") - col("cdf_pool"))).as("ks"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("ks"), col("grp_total"))
-  }
+  def ks(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, 1e-6, 1e6), groupCol, "ks")
 
   /** χ² in FIXED POINT: each cell's term is rounded to `scale` decimals and
-    * summed as integers, so the statistic is ORDER-INDEPENDENT and
-    * bit-identical across engines (per-term double arithmetic over integer
-    * counts is deterministic; only the summation order varied). Returns
-    * (groupCol, chi2_fp: Long = round(chi2·scale) summed per term, grp_total). */
+    * summed as integers, so the statistic is bit-identical across engines
+    * whatever their summation order. Returns (groupCol, chi2_fp: Long =
+    * Σ round(term·scale), grp_total). */
   def chiSquareFixedPoint(df: DataFrame, valueCol: String, groupCol: String,
-      binWidth: Double, scale: Double = 1e6): DataFrame = {
-    cells(df, valueCol, groupCol, binWidth)
-      // grp_total cast FIRST so the product is double (never overflows at
-      // 10^12 rows where a long·long product would)
-      .withColumn("exp", col("grp_total").cast(DoubleType) * col("bin_total") / col("n_total"))
-      .withColumn("term_fp",
-        round(when(col("exp") > 0,
-          (col("obs") - col("exp")) * (col("obs") - col("exp")) / col("exp"))
-          .otherwise(lit(0.0)) * scale).cast(LongType))
-      .groupBy(col("grp"))
-      .agg(sum("term_fp").as("chi2_fp"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("chi2_fp"), col("grp_total"))
-  }
+      binWidth: Double, scale: Double = 1e6): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, 1e-6, scale), groupCol, "chi2_fp")
 
   /** KS in FIXED POINT: per-cell |CDF_g − CDF_pool| is rounded, then maxed —
     * round is monotone, so max(round(x)) == round(max(x)) and the result is
     * oracle-exact. Returns (groupCol, ks_fp: Long, grp_total). */
   def ksFixedPoint(df: DataFrame, valueCol: String, groupCol: String,
-      binWidth: Double, scale: Double = 1e6): DataFrame = {
-    val c = cells(df, valueCol, groupCol, binWidth)
-    val wGrp = Window.partitionBy("grp").orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    c.withColumn("cum_obs", sum("obs").over(wGrp))
-      .withColumn("cum_bin", sum("bin_total").over(wGrp))
-      .withColumn("diff_fp", round(abs(
-        col("cum_obs").cast(DoubleType) / col("grp_total") -
-          col("cum_bin").cast(DoubleType) / col("n_total")) * scale).cast(LongType))
-      .groupBy(col("grp"))
-      .agg(max("diff_fp").as("ks_fp"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("ks_fp"), col("grp_total"))
-  }
+      binWidth: Double, scale: Double = 1e6): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, 1e-6, scale), groupCol, "ks_fp")
 
   /** Population Stability Index per group vs the pooled distribution:
     * psi(g) = Σ_bins (p_g − p_pool)·ln(p_g / p_pool), probabilities floored
-    * at `minP` (standard smoothing so empty cells contribute finitely).
-    * Common thresholds: <0.1 stable, 0.1–0.25 moderate, >0.25 shifted.
-    * Same scale shape as χ²: one fact-table agg, then ≤ groups×bins algebra. */
+    * at `minP` (> 0: standard smoothing so empty cells contribute finitely).
+    * Common thresholds: <0.1 stable, 0.1–0.25 moderate, >0.25 shifted. */
   def psi(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double,
-      minP: Double = 1e-6): DataFrame = {
-    cells(df, valueCol, groupCol, binWidth)
-      .withColumn("p_g", greatest(col("obs").cast(DoubleType) / col("grp_total"), lit(minP)))
-      .withColumn("p_pool", greatest(col("bin_total").cast(DoubleType) / col("n_total"), lit(minP)))
-      .withColumn("term", (col("p_g") - col("p_pool")) * log(col("p_g") / col("p_pool")))
-      .groupBy(col("grp"))
-      .agg(sum("term").as("psi"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("psi"), col("grp_total"))
-  }
+      minP: Double = 1e-6): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, minP, 1e6), groupCol, "psi")
 
   /** PSI in FIXED POINT (per-term rounding, integer sum — order-independent
-    * like [[chiSquareFixedPoint]]). ln() must agree bitwise between engines
-    * for oracle use; verified empirically on the fixture data (both JVM and
-    * DuckDB ship correctly-rounded-in-practice libm implementations). */
+    * like [[chiSquareFixedPoint]]). ln is `StrictMath.log`, as in Spark's
+    * `log`; it must agree bitwise with the oracle engine's, which holds on
+    * the fixture data (both ship correctly-rounded-in-practice libm). */
   def psiFixedPoint(df: DataFrame, valueCol: String, groupCol: String, binWidth: Double,
-      minP: Double = 1e-6, scale: Double = 1e6): DataFrame = {
-    cells(df, valueCol, groupCol, binWidth)
-      .withColumn("p_g", greatest(col("obs").cast(DoubleType) / col("grp_total"), lit(minP)))
-      .withColumn("p_pool", greatest(col("bin_total").cast(DoubleType) / col("n_total"), lit(minP)))
-      .withColumn("term_fp",
-        round((col("p_g") - col("p_pool")) * log(col("p_g") / col("p_pool")) * scale)
-          .cast(LongType))
-      .groupBy(col("grp"))
-      .agg(sum("term_fp").as("psi_fp"), first("grp_total").as("grp_total"))
-      .select(col("grp").as(groupCol), col("psi_fp"), col("grp_total"))
-  }
+      minP: Double = 1e-6, scale: Double = 1e6): DataFrame =
+    pick(statistics(df, valueCol, groupCol, binWidth, minP, scale), groupCol, "psi_fp")
 
   /** Exact per-(group, bin) histogram — the oracle-friendly building block
     * (integer counts only, no floating point). */

@@ -61,7 +61,9 @@ object VecGetter {
   * plausible but WRONG score; enforce equal dims upstream or filter nulls.
   * Implements `doGenCode`, so the scoring stage stays inside whole-stage
   * codegen with a primitive loop (no per-row boxing). */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+case class VecDot(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(VecGetter.inputType, VecGetter.inputType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   @transient private lazy val getL = VecGetter.forType(left.dataType)
@@ -104,7 +106,8 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   * codegen (one interpreted expression evicts the WHOLE stage); the kernel
   * itself runs as one JVM method via an embedded reference — same loop, no
   * per-row boxing beyond the ArrayData handle. */
-case class VecNorm(child: Expression) extends UnaryExpression {
+case class VecNorm(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(VecGetter.inputType)
   override def dataType: DataType = DoubleType
   @transient private lazy val get = VecGetter.forType(child.dataType)
   def compute(x: ArrayData): Double = {
@@ -245,7 +248,8 @@ object MinHashBandHashes {
 
 /** SimHash64 over string shingles: bit i of the result is the sign of the
   * shingle-count-weighted sum of hash bit i. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
@@ -278,7 +282,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * hyperplane dots. Hyperplane weights derive from mix(plane, dim) — no
   * driver-side randomness, reproducible at any parallelism. */
 case class SignLshBands(child: Expression, bands: Int, planesPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(VecGetter.inputType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val planes = bands * planesPerBand
   // weight(p, d) ∈ {-2,-1,0,1,2}; materialized lazily per executor for the
@@ -793,8 +798,9 @@ case class StringArrayIntersectCount(left: Expression, right: Expression)
   * negligible at 10^12-sequence scale (birthday bound ≈ 2^-20 per 10^6
   * distinct spans). */
 case class TokenNgramHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(n > 0, "n > 0")
+  override def inputTypes = Seq(IntGetter.inputType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   @transient private lazy val get: (ArrayData, Int) => Long =
     IntGetter.forType(child.dataType)
@@ -838,8 +844,9 @@ case class TokenNgramHashes(child: Expression, n: Int)
   * are the trained model, nlist×dim doubles — a few KB), so assignment is one
   * narrow codegen-stage-friendly pass with no join. */
 case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(centroids.nonEmpty, "NearestCentroid requires >= 1 centroid")
+  override def inputTypes = Seq(VecGetter.inputType)
   override def dataType: DataType = IntegerType
   @transient private lazy val get = VecGetter.forType(child.dataType)
   def compute(x: ArrayData): Int = {
@@ -873,9 +880,10 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
   * round-trip per query. Centroids ride inside the expression (nlist×dim
   * doubles — KBs). */
 case class NearestCentroids(child: Expression, centroids: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(centroids.nonEmpty, "NearestCentroids requires >= 1 centroid")
   require(nprobe >= 1, "nprobe >= 1")
+  override def inputTypes = Seq(VecGetter.inputType)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   @transient private lazy val get = VecGetter.forType(child.dataType)
   def compute(x: ArrayData): ArrayData = {

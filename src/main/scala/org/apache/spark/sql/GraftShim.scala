@@ -13,4 +13,8 @@ object GraftShim {
   /** Any of `types`, for an `ExpectsInputTypes` kernel that accepts several
     * (`TypeCollection` is `private[sql]`). */
   def anyOf(types: AbstractDataType*): AbstractDataType = TypeCollection(types: _*)
+  /** Spark's ANSI `cast(double AS long)`: truncates, and raises
+    * CAST_OVERFLOW out of range or on NaN (`DoubleExactNumeric` is
+    * `private[sql]`). */
+  def doubleToLongExact(d: Double): Long = types.DoubleExactNumeric.toLong(d)
 }

@@ -457,6 +457,22 @@ class QualitySpec extends SparkSpec {
     assert(Coverage.uncovered(spark, full, base.schema).isEmpty)
   }
 
+  test("Coverage audit: drift checks read their value and group columns, with no job") {
+    val base = Seq((1L, 2, "src0", "x")).toDF("doc_id", "n_tok", "source", "extra")
+    val drift = Seq(DriftChiSquare("n_tok", "source", 2.0, 100.0),
+      DriftPSI("n_tok", "source", 2.0, 0.25), DriftKS("n_tok", "source", 2.0, 0.2))
+    val compiled = ConstraintSuite("doc_id", Seq(NonNull("doc_id")), drift)
+      .compile(base.schema).toOption.get
+    val sc = spark.sparkContext
+    sc.setJobGroup("coverage-drift", "coverage audit of the drift checks")
+    val cov = try Coverage.audit(spark, compiled, base.schema).map(c => c.column -> c.checkIds).toMap
+      finally sc.clearJobGroup()
+    val ids = drift.map(_.id).sorted
+    assert(cov("n_tok") === ids && cov("source") === ids)
+    assert(cov("doc_id") === Seq("nonnull(doc_id)") && cov("extra") === Nil)
+    assert(sc.statusTracker.getJobIdsForGroup("coverage-drift").isEmpty)
+  }
+
   test("Triage.topViolations: digit-fold classes, tie-break, bound, engine composition") {
     val vios = Seq(
       ("range(n)", "size 17 != 5", "d3"),

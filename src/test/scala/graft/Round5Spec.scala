@@ -165,6 +165,7 @@ class Round5Spec extends SparkSpec {
       .toDF("n", "text", "longs", "strs", "dbls")
     val grams = Seq(Map("a" -> 2L, "b" -> 1L), Map("a\u0001b" -> 1L))
     val bc = spark.sparkContext.broadcast((grams, 3L))
+    val cents = Array(Array(0.0, 0.0), Array(1.0, 2.0))
     try {
       val bad: Seq[(String, org.apache.spark.sql.Column)] = Seq(
         "repetition_stats" -> TextFunctions.repetition_stats(col("n")),
@@ -183,7 +184,14 @@ class Round5Spec extends SparkSpec {
         "array_count_eq(array<double>)" -> VecFunctions.array_count_eq(col("dbls"), 0L),
         "array_pad_suffix_ok" -> VecFunctions.array_pad_suffix_ok(col("dbls"), 0L),
         "array_bad_segments" -> VecFunctions.array_bad_segments(col("dbls"), 0L, 1L, 9L),
-        "array_last_not_eq" -> VecFunctions.array_last_not_eq(col("strs"), 0L))
+        "array_last_not_eq" -> VecFunctions.array_last_not_eq(col("strs"), 0L),
+        "vec_dot" -> VecFunctions.vec_dot(col("dbls"), col("strs")),
+        "vec_norm" -> VecFunctions.vec_norm(col("strs")),
+        "simhash64" -> VecFunctions.simhash64(col("longs")),
+        "sign_lsh_bands" -> VecFunctions.sign_lsh_bands(col("strs"), 2, 4),
+        "token_ngram_hashes" -> VecFunctions.token_ngram_hashes(col("dbls"), 2),
+        "nearest_centroid" -> VecFunctions.nearest_centroid(col("strs"), cents),
+        "nearest_centroids" -> VecFunctions.nearest_centroids(col("text"), cents, 1))
       bad.foreach { case (name, c) =>
         val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c))
         assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")
@@ -206,6 +214,16 @@ class Round5Spec extends SparkSpec {
       assert(ok.getLong(3) === ok.getLong(4))
       assert((ok.getBoolean(5), ok.getBoolean(6), ok.getLong(7), ok.getLong(8),
         ok.getBoolean(9), ok.getLong(10), ok.getLong(11)) === ((false, true, 1L, 1L, true, 0L, 1L)))
+      val vec = df.select(
+        VecFunctions.vec_dot(col("dbls"), col("longs")),
+        VecFunctions.vec_norm(col("dbls")),
+        VecFunctions.simhash64(col("strs")) === VecFunctions.simhash64(array(lit("a"), lit("b"))),
+        size(VecFunctions.sign_lsh_bands(col("dbls"), 2, 4)),
+        size(VecFunctions.token_ngram_hashes(col("longs"), 2)),
+        VecFunctions.nearest_centroid(col("dbls"), cents),
+        VecFunctions.nearest_centroids(col("longs"), cents, 2)).head()
+      assert((vec.getDouble(0), vec.getDouble(1), vec.getBoolean(2), vec.getInt(3), vec.getInt(4),
+        vec.getInt(5), vec.getSeq[Int](6)) === ((5.0, math.sqrt(5.0), true, 2, 1, 1, Seq(1, 0))))
     } finally bc.destroy()
   }
 
